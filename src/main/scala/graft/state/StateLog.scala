@@ -1,12 +1,25 @@
 package graft.state
 
 import graft.model.{PipelineStateRow, PipelineStatus}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.OutputFile
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{AnalysisException, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
+import java.io.IOException
 import java.time.Instant
+import java.util.UUID
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 /** Append-only pipeline state journal (SURVEY §2.1 K5, §2.4 G2).
   *
@@ -19,8 +32,9 @@ import scala.collection.concurrent.TrieMap
   * on file-commit visibility.
   *
   * State rows are metadata (O(runs × stages), not O(data)), so a
-  * driver-side map and tiny appends are the right scale trade-off even at
-  * 100 TB of *data*; the Parquet journal is what dashboards (G2) query.
+  * driver-side map and one single-row Parquet file written by the driver
+  * per append (no Spark job) are the right scale trade-off even at 100 TB
+  * of *data*; the Parquet journal is what dashboards (G2) query.
   */
 final class StateLog(spark: SparkSession, path: String) {
 
@@ -105,34 +119,38 @@ final class StateLog(spark: SparkSession, path: String) {
         throw e
     }
 
-  /** Write one already-stamped row into the journal. Each append writes to
-    * its OWN staging directory and renames the part file into the journal —
-    * concurrent appends (PipelineService run futures, the metrics listener)
-    * never share a `_temporary` dir, so one job's commit can't delete
-    * another's in-flight attempt files (the FileOutputCommitter race a
-    * shared-path `mode(Append)` write has). Runs unlocked: per-append
-    * staging is exactly what makes concurrent writes safe. */
+  /** Write one already-stamped row into the journal as a single-row
+    * Parquet file, from the driver: no Spark job, just a file write with
+    * the session's Hadoop settings (the same filesystem configuration a
+    * Spark write would use). Each append writes its OWN staging file
+    * outside the journal directory and renames it in as
+    * `append-<uuid>.parquet`, so a reader never lists a half-written file
+    * and concurrent appends (PipelineService run futures, the metrics
+    * listener) share nothing. Runs unlocked: per-append staging is exactly
+    * what makes concurrent writes safe. */
   private def writeRow(row: PipelineStateRow): Unit = {
-    import org.apache.hadoop.fs.Path
-    val id = java.util.UUID.randomUUID().toString
-    val staging = s"$path.append-$id"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(row).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
+    val id = UUID.randomUUID().toString
+    val conf = spark.sessionState.newHadoopConf()
+    val staged = new Path(s"$path.append-$id")
+    val fs = staged.getFileSystem(conf)
+    try {
+      val writer = new StateLog.RowWriterBuilder(HadoopOutputFile.fromPath(staged, conf))
+        .withConf(conf).build()
+      try writer.write(row) finally writer.close()
+    } catch {
+      case NonFatal(e) => // the staged file is incomplete: it holds no durable row
+        try fs.delete(staged, false) catch { case NonFatal(d) => e.addSuppressed(d) }
+        throw e
+    }
     fs.mkdirs(new Path(path))
-    fs.listStatus(new Path(staging))
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .foreach { st =>
-        val target = new Path(path, s"append-$id.parquet")
-        // rename returning false (HDFS/S3A convention) would leave the
-        // journal without this row. Fail loudly AND leave the staging dir
-        // behind — it holds the only durable copy of the row, named after
-        // the journal so an operator can recover it (cf. promoteStaged).
-        if (!fs.rename(st.getPath, target))
-          throw new java.io.IOException(
-            s"StateLog.append: rename ${st.getPath} -> $target returned false; " +
-              s"row preserved in $staging")
-      }
-    fs.delete(new Path(staging), true) // success: staging is now empty shell
+    val target = new Path(path, s"append-$id.parquet")
+    // rename returning false (HDFS/S3A convention) would leave the journal
+    // without this row. Fail loudly AND leave the staged file behind — it
+    // holds the only durable copy of the row, named after the journal so
+    // an operator can recover it (cf. promoteStaged).
+    if (!fs.rename(staged, target))
+      throw new IOException(
+        s"StateLog.append: rename $staged -> $target returned false; row preserved in $staged")
   }
 
   /** Append one state row. */
@@ -170,10 +188,16 @@ final class StateLog(spark: SparkSession, path: String) {
       .as[PipelineStateRow]
       .take(1).headOption
 
-  /** Full journal as a DataFrame. */
+  /** Full journal as a DataFrame. Read with the known row schema, so no
+    * schema-inference job runs. A journal that does not exist yet is
+    * empty; any other read failure propagates — an unreadable journal
+    * must not make known pipelines look unknown. */
   def journal(): DataFrame =
-    try spark.read.parquet(path)
-    catch { case _: Exception => Seq.empty[PipelineStateRow].toDS().toDF() }
+    try spark.read.schema(StateLog.RowSchema).parquet(path)
+    catch {
+      case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        Seq.empty[PipelineStateRow].toDS().toDF()
+    }
 
   /** Latest row per pipeline id (window keep-first) — the reference's
     * `status` lookup shape (SURVEY §2.5). */
@@ -206,21 +230,26 @@ final class StateLog(spark: SparkSession, path: String) {
     * leaves some rows duplicated in the journal — an append log tolerates
     * that (latest-per-pipeline is unaffected) — and never loses rows. */
   def compact(): Unit = {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(path))) return
     val inputs = fs.listStatus(new Path(path))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath)
     if (inputs.length <= 1) return
-    val snapshot = spark.read.parquet(inputs.map(_.toString).toIndexedSeq: _*)
+    val snapshot = spark.read.schema(StateLog.RowSchema)
+      .parquet(inputs.map(_.toString).toIndexedSeq: _*)
     val tmp = s"$path.compact.tmp"
     snapshot.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     fs.listStatus(new Path(tmp))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .foreach { st =>
-        fs.rename(st.getPath,
-          new Path(path, s"compacted-${java.util.UUID.randomUUID()}.parquet"))
+        val target = new Path(path, s"compacted-${UUID.randomUUID()}.parquet")
+        // a false rename means the merged rows never reached the journal:
+        // fail before deleting a single input, and keep the compacted copy
+        if (!fs.rename(st.getPath, target))
+          throw new IOException(
+            s"StateLog.compact: rename ${st.getPath} -> $target returned false; " +
+              s"inputs kept, merged copy in $tmp")
       }
     inputs.foreach(fs.delete(_, false))
     fs.delete(new Path(tmp), true)
@@ -238,4 +267,56 @@ final class StateLog(spark: SparkSession, path: String) {
         sum(when(col("status") === PipelineStatus.Succeeded, 1L).otherwise(0L)).as("n_success"),
         round(avg(when(col("status") === PipelineStatus.Succeeded, 1.0).otherwise(0.0)), 6)
           .as("success_rate"))
+}
+
+object StateLog {
+
+  /** The journal's row schema: what every reader gets back, whichever
+    * writer (this driver-side writer or an older Spark write) made the
+    * file. */
+  private val RowSchema: StructType = Encoders.product[PipelineStateRow].schema
+
+  /** Footer key under which Spark keeps a file's Spark schema. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Parquet schema a Spark write gives [[RowSchema]]: every column an
+    * optional UTF-8 binary, in the message Spark names `spark_schema`. */
+  private val ParquetSchema: MessageType = {
+    require(RowSchema.forall(_.dataType == StringType),
+      s"StateLog writes string columns only: $RowSchema")
+    new MessageType("spark_schema", RowSchema.fieldNames.toIndexedSeq.map(name =>
+      Types.optional(PrimitiveTypeName.BINARY).as(LogicalTypeAnnotation.stringType())
+        .named(name): Type): _*)
+  }
+
+  /** Writes [[PipelineStateRow]]s field by field; a null field is left out
+    * of the record, which is how Parquet stores a null. */
+  private final class RowWriteSupport extends WriteSupport[PipelineStateRow] {
+    private var out: RecordConsumer = _
+
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(ParquetSchema,
+        java.util.Map.of(SparkRowMetadataKey, RowSchema.json))
+
+    override def prepareForWrite(recordConsumer: RecordConsumer): Unit = out = recordConsumer
+
+    override def write(row: PipelineStateRow): Unit = {
+      out.startMessage()
+      row.productIterator.zip(RowSchema.fieldNames.iterator).zipWithIndex.foreach {
+        case ((null, _), _) => ()
+        case ((v, name), i) =>
+          out.startField(name, i)
+          out.addBinary(Binary.fromString(v.toString))
+          out.endField(name, i)
+      }
+      out.endMessage()
+    }
+  }
+
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[PipelineStateRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[PipelineStateRow] =
+      new RowWriteSupport
+  }
 }

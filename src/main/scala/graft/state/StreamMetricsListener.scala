@@ -10,9 +10,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * pipeline writes (G2, `StateLog.stageMetrics`).
   *
   * Appends run on a dedicated single-thread executor: a `StateLog.append`
-  * is a (small) Spark write job, and running it on the listener-bus
-  * dispatch thread would back up the bus and get events dropped under
-  * short triggers. */
+  * is a driver-side file write and rename (no Spark job, but still file
+  * I/O), and doing that I/O on the listener-bus dispatch thread would
+  * back up the bus and get events dropped under short triggers. */
 final class StreamMetricsListener(stateLog: StateLog)
     extends StreamingQueryListener {
 

@@ -271,6 +271,30 @@ class OrchestrationSpec extends SparkSpec {
     assert(failed2.isInstanceOf[PipelineOutcome.Failed])
   }
 
+  test("journal appends, and opening the journal, launch no Spark job") {
+    val sc = spark.sparkContext
+    val log = new StateLog(spark, freshLayout().state)
+    val group = s"statelog-no-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "journal appends")
+    try {
+      log.append("j1", "pipeline", PipelineStatus.Running)
+      log.append("j1", "validate", PipelineStatus.Succeeded, null)
+      assert(log.appendDetail("j1", "pipeline", "updated: x").isDefined)
+      val journal = log.journal() // known schema: no inference job
+      // a sentinel job in the same group: job events reach the status
+      // tracker in submission order, so once the sentinel shows up any job
+      // an append had launched would show up too
+      val sentinel = sc.parallelize(Seq(1), 1).countAsync()
+      assert(sentinel.get() == 1L)
+      val sentinelId = sentinel.jobIds.head
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinelId) &&
+        System.nanoTime() < deadline) Thread.`yield`()
+      assert(sc.statusTracker.getJobIdsForGroup(group).toSeq == Seq(sentinelId))
+      assert(journal.count() == 3)
+    } finally sc.clearJobGroup()
+  }
+
   test("state log rolls back in-memory status when the journal write fails") {
     val root = Files.createTempDirectory("graft-rb").toString
     // make the journal parent a FILE so the parquet write must fail
