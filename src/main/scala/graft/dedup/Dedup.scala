@@ -3,7 +3,7 @@ package graft.dedup
 import graft.Tables
 import graft.sink.Sinks
 import graft.text.TextAnalysis.{normText, tokens}
-import graft.functions.VectorFunctions
+import graft.functions.{MinHashBands, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,11 +91,11 @@ object Dedup {
     * (linear in the corpus) instead of Σ df² (quadratic in a
     * boilerplate-heavy head — the measured 660 M-meet melt at 15 k
     * hostile docs); on THIS natural corpus the df head ends at 32 < 64,
-    * so the cap drops nothing — and a one-scalar probe (any df over the
-    * cap?) lets the plan fall back to the uncapped shape entirely,
-    * because the r14 bench measured the always-on split-count machinery
-    * at ~3× the uncapped cpu on d02/d07/d09/g10 for zero benefit when
-    * no posting crosses the cap.
+    * so the cap drops nothing — and when the over-cap hash set is empty
+    * the plan falls back to the uncapped shape entirely, because the r14
+    * bench measured the always-on split-count machinery at ~3× the
+    * uncapped cpu on d02/d07/d09/g10 for zero benefit when no posting
+    * crosses the cap.
     *
     * EXACTNESS (the split-count form — algebraically d22's full-set
     * verify, cheaper when the over-cap side is empty): the true common
@@ -113,10 +113,15 @@ object Dedup {
     *
     * Plan shape: shingles are hashed to 64-bit keys immediately (the
     * inverted index never shuffles strings) and eagerly materialized
-    * ONCE (the d20 localCheckpoint discipline) — the df window, the
+    * ONCE (the d20 localCheckpoint discipline) — the df aggregate, the
     * size aggregate and both split-count sides all read the 16-byte
-    * (doc_id, h) frame. The merge hint keeps AQE from flipping the
-    * self-join to broadcast, which would clone the build side. */
+    * (doc_id, h) frame. Each index is built once per call: the over-cap
+    * hash set (one `groupBy(h)` count, checkpointed) is both the probe
+    * and the split, whose sides are a `left_anti` and a `left_semi`
+    * join against it (no df window recomputed per consumer), and the
+    * sub-cap pair counts are checkpointed for their two consumers. The
+    * shuffle_hash hint keeps AQE from flipping the self-join to
+    * broadcast, which would clone the build side. */
   def d02NgramJaccard(s: SparkSession, d: String): DataFrame =
     d02Over(Tables.documents(s, d))
 
@@ -129,20 +134,20 @@ object Dedup {
       .select(col("doc_id"), explode(col("sh")).as("sg"))
       .select(col("doc_id"), xxhash64(col("sg")).as("h"))
       .localCheckpoint(true)
-    // Bounded driver scalar (0/1), documented per the repo rule: does ANY
-    // shingle's df exceed the cap? On a natural corpus (df head 32 < 64)
-    // the answer is no and the whole capped machinery degenerates — the
-    // df window and the split-count joins would be pure overhead (the
-    // r14 bench measured them at ~3x the uncapped cpu on d02/d07/d09/g10)
-    // — so the plan falls back to the uncapped shape off the SAME
-    // checkpointed index, which the cap provably equals when nothing
-    // crosses it. One map-side-combinable aggregate over the 16-byte
-    // frame, cheaper than the window it replaces.
-    val anyOverCap = inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > DfCap).limit(1).count() > 0
+    // The over-cap split, computed ONCE: the hashes whose df exceeds the
+    // cap, from one map-side-combinable aggregate over the 16-byte frame,
+    // eagerly materialized. Its emptiness is the probe (a bounded 0/1
+    // driver scalar): on a natural corpus (df head 32 < 64) nothing
+    // crosses the cap and the split-count joins would be pure overhead
+    // (the r14 bench measured them at ~3x the uncapped cpu on
+    // d02/d07/d09/g10), so the plan falls back to the uncapped shape off
+    // the SAME checkpointed index, which the cap provably equals then.
+    val overH = inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > DfCap).select(col("h"))
+      .localCheckpoint(true)
     val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val common =
-      if (!anyOverCap) {
+      if (overH.isEmpty) {
         val sub = inv.repartition(col("h"))
         // shuffled-hash, not sort-merge (round 15, guide §3.1): same
         // buffered-copy elimination as d20's candidate join; the hint
@@ -156,17 +161,16 @@ object Dedup {
         // c = c_subcap (from the capped candidate self-join itself)
         //   + c_overcap (over-cap postings added back per pair through
         //     d20's id-keyed shuffle-hash joins — never a pair-list or
-        //     index broadcast)
-        val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-        val flagged = inv.withColumn("df", count(lit(1)).over(wDf))
-        val sub = flagged.filter(col("df") <= DfCap)
-          .select(col("doc_id"), col("h"))
-          .repartition(col("h"))
-        val over = flagged.filter(col("df") > DfCap).select(col("doc_id"), col("h"))
+        //     index broadcast). Both sides of the split are semi/anti
+        //     joins against the one over-cap hash set, and the sub-cap
+        //     pair counts are materialized once for their two consumers.
+        val sub = inv.join(overH, Seq("h"), "left_anti").repartition(col("h"))
+        val over = inv.join(overH, Seq("h"), "left_semi")
         val subCommon = sub.as("a").join(sub.as("b").hint("shuffle_hash"),
             col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
           .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .agg(count(lit(1)).as("c_sub"))
+          .localCheckpoint(true)
         val overCommon = subCommon.select(col("doc_a"), col("doc_b"))
           .join(over.select(col("doc_id").as("doc_a"), col("h")).hint("shuffle_hash"),
             "doc_a")
@@ -288,9 +292,13 @@ object Dedup {
     // still funnel through the ONE repartition(h) exchange below
     // (ReusedExchange, PlanSpec-pinned), and the explicit hint keeps AQE
     // from flipping to broadcast (which would clone the build side) the
-    // same way the old merge hint did. Scale-safe: post-shuffle build
-    // partitions are AQE-size-bounded, and skew-join splitting applies
-    // to SHJ as it does to SMJ.
+    // same way the old merge hint did. NOT scale-safe as it stands: the
+    // repartition(h) exchange is REPARTITION_BY_COL, which AQE neither
+    // size-bounds nor skew-splits (skew-join splitting applies only to
+    // ENSURE_REQUIREMENTS shuffles), and the SHJ build side is an
+    // in-memory hash map that does not spill, so one hot hash partition
+    // that SMJ would have spilled can exhaust executor memory. The
+    // bounded replacement is ROADMAP item 3's candidate-pair operator.
     val cand = prefix.as("a").join(prefix.as("b").hint("shuffle_hash"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
           least(col("a.n"), col("b.n")) >=
@@ -551,7 +559,7 @@ object Dedup {
   /** The UNCAPPED band pairs on the same frame — the blowup the cap
     * avoids, exposed for the spec's measurement. */
   private[graft] def d23UncappedCandidatesOver(ds: DataFrame): DataFrame =
-    bucketPairs(minhashBuckets(ds))
+    minhashCandidates(ds)
 
   private[graft] def hostileShingles(s: SparkSession, d: String): DataFrame =
     docShinglesOf(hostileDocs(s, d))
@@ -568,13 +576,11 @@ object Dedup {
     * corpus has essentially no mid-J pairs (random text shares ~no
     * shingles) and every candidate is exact-verified anyway.
     *
-    * 64 hash columns also keeps the signature aggregate under Spark's
-    * whole-stage-codegen field limit (spark.sql.codegen.maxFields = 100)
-    * — at 128 columns the hot aggregate silently fell back to interpreted
-    * evaluation. */
-  val NumHashes = 64
-  val BandRows  = 2
-  val NumBands: Int = NumHashes / BandRows
+    * The signature itself is built by the native
+    * [[graft.functions.MinHashBands]] kernel, which owns these constants. */
+  val NumHashes: Int = MinHashBands.NumHashes
+  val BandRows: Int = MinHashBands.BandRows
+  val NumBands: Int = MinHashBands.NumBands
 
   /** Choose an LSH banding geometry from the DECISION requirements
     * instead of by hand: given the Jaccard threshold J* the pipeline
@@ -605,39 +611,35 @@ object Dedup {
     (b, r)
   }
 
-  /** d03: MinHash + LSH near-dup. Shingles are exploded once and hashed
-    * flat (`xxhash64` is codegen'd as a plain expression; wrapping it in
-    * `transform` lambdas would evaluate interpreted per element —
-    * [[NumHashes]] array traversals per doc). The i-th permutation is
-    * xxhash64(shingle_hash, i); the signature is a [[NumHashes]]-column
-    * min aggregate (partial map-side mins, then one shuffle keyed by
-    * doc_id); band the signature, bucket-join on (band, band_hash), then
+  /** d03: MinHash + LSH near-dup. The i-th permutation is
+    * xxhash64(shingle_hash, i); each document's [[NumHashes]]-hash
+    * signature and its [[NumBands]] band hashes come from ONE native
+    * [[graft.functions.MinHashBands]] call over its shingle array
+    * ([[minhashBuckets]]) — no shingle explode, no signature aggregate,
+    * no doc_id-keyed shuffle. Bucket-join on (band, band_hash), then
     * verify candidates with exact Jaccard ≥ 0.6 (array_intersect /
-    * array_union on the cached shingle sets). */
+    * array_union on the shingle sets). */
   def d03MinHashLsh(s: SparkSession, d: String): DataFrame = {
-    // One repartition exchange: the signature build reads it once and the
-    // two verify joins reuse it instead of recomputing the shingle sets.
+    // One repartition exchange: the band kernel reads it and the two
+    // verify joins reuse it instead of recomputing the shingle sets.
     val ds = docShingles(s, d).repartition(col("doc_id"))
     jaccardVerify(minhashCandidates(ds), ds)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** The d03 MinHash band-bucket frame over a (doc_id, sh) shingle
-    * frame: one (doc_id, band, band_hash) row per signature band. */
-  private def minhashBuckets(ds: DataFrame): DataFrame = {
-    val exploded = ds.select(col("doc_id"), explode(col("sh")).as("sg"))
-      .withColumn("h", xxhash64(col("sg")))
-    val mins = (0 until NumHashes).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    val sig = exploded.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bands = (0 until NumBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until BandRows).map(r => col(s"m${b * BandRows + r}")): _*).as("bh"))
-    }
-    sig
-      .select(col("doc_id"), explode(array(bands: _*)).as("bk"))
+  /** The MinHash band-bucket frame over a (doc_id, sh) shingle frame:
+    * one (doc_id, band, bh) row per signature band, from ONE native
+    * [[graft.functions.MinHashBands]] call per document — a narrow
+    * projection of `ds` (no shingle explode, no signature aggregate, no
+    * doc_id shuffle), so a broadcast band join that evaluates both sides
+    * pays one kernel pass per side, not a wide aggregate per side. The
+    * one bucketing path of d03, d12, d16, d23 and st18: the
+    * (band, bh) values are shared across rows and across the stream's
+    * micro-batches, so they must never drift between them. */
+  private[graft] def minhashBuckets(ds: DataFrame): DataFrame =
+    ds.select(col("doc_id"), explode(MinHashBands.of(col("sh"))).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-  }
 
   /** Distinct (doc_a < doc_b) pairs sharing any bucket of `buckets`. */
   private def bucketPairs(buckets: DataFrame): DataFrame =
@@ -1595,44 +1597,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** d12: ingest-time NEAR-dup admission control — the near-duplicate
-    * counterpart of d06's exact-fingerprint gate: flag every BATCH
-    * document (odd ids, d06's split convention) whose shingle Jaccard
-    * with ANY HISTORY document (even ids) reaches 0.6, reporting the
-    * match count and the best-matching history doc. This is the check a
-    * real ingest runs so paraphrased or lightly-edited re-submissions
-    * don't re-enter a deduplicated corpus — exact fingerprints (d06)
-    * can't see them, and batch-internal near-dup (d02/d03) doesn't look
-    * at history.
-    *
-    * Scale shape: d03's banded-MinHash machinery across two frames —
-    * signatures build in one shuffle per side, candidates come from the
-    * (band, band_hash) bucket join only (at J = 0.6 the 32×2-band miss
-    * probability is ~6e-7, d03's math), and the exact-Jaccard verify
-    * joins candidate ids back to the one repartition exchange both
-    * verify joins reuse. Nothing is ever all-pairs. At a real ingest the
-    * history side (signatures + shingle sets) is a maintained bucketed
-    * table (the d06 precedent) so only the small batch side computes per
-    * run; here both sides derive in-query so the oracle can restate the
-    * whole decision exactly. The best-match tie-break rides the ROUNDED
-    * jaccard (d09's engine-stable arg-max idiom). */
-  /** d12's MinHash-signature + banding stage over an explicit
-    * (doc_id, sh) frame — factored out so st18's in-stream admission
-    * gate computes byte-identical buckets for its micro-batches and its
-    * static history index. */
-  private[graft] def lshBuckets(ds: DataFrame): DataFrame = {
-    val exploded = ds.select(col("doc_id"), explode(col("sh")).as("sg"))
-      .withColumn("h", xxhash64(col("sg")))
-    val mins = (0 until NumHashes).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    val sig = exploded.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bands = (0 until NumBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until BandRows).map(r => col(s"m${b * BandRows + r}")): _*).as("bh"))
-    }
-    sig.select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bh").as("bh"))
-  }
-
   /** d12's decision stage over explicit frames — candidates ONLY from
     * (band, bh) bucket collisions, exact-Jaccard verify at
     * [[NearDupJ]], per-doc match census with the rounded-jaccard
@@ -1664,27 +1628,33 @@ object Dedup {
   /** d12's exact-Jaccard admission floor. */
   val NearDupJ = 0.6
 
+  /** d12: ingest-time NEAR-dup admission control — the near-duplicate
+    * counterpart of d06's exact-fingerprint gate: flag every BATCH
+    * document (odd ids, d06's split convention) whose shingle Jaccard
+    * with ANY HISTORY document (even ids) reaches 0.6, reporting the
+    * match count and the best-matching history doc. This is the check a
+    * real ingest runs so paraphrased or lightly-edited re-submissions
+    * don't re-enter a deduplicated corpus — exact fingerprints (d06)
+    * can't see them, and batch-internal near-dup (d02/d03) doesn't look
+    * at history.
+    *
+    * Scale shape: d03's banded-MinHash machinery across two frames —
+    * band hashes are one [[minhashBuckets]] kernel call per document
+    * (no signature shuffle), candidates come from the
+    * (band, band_hash) bucket join only (at J = 0.6 the 32×2-band miss
+    * probability is ~6e-7, d03's math), and the exact-Jaccard verify
+    * joins candidate ids back to the one repartition exchange both
+    * verify joins reuse. Nothing is ever all-pairs. At a real ingest the
+    * history side (signatures + shingle sets) is a maintained bucketed
+    * table (the d06 precedent) so only the small batch side computes per
+    * run; here both sides derive in-query so the oracle can restate the
+    * whole decision exactly. The best-match tie-break rides the ROUNDED
+    * jaccard (d09's engine-stable arg-max idiom). */
   def d12IncrementalNearDup(s: SparkSession, d: String): DataFrame = {
     val ds = docShingles(s, d).repartition(col("doc_id"))
-    val buckets = lshBuckets(ds)
-    val candidates = buckets.filter(col("doc_id") % 2 === 1).as("a")
-      .join(buckets.filter(col("doc_id") % 2 === 0).as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("hist_id"))
-      .distinct()
-    candidates
-      .join(ds.select(col("doc_id"), col("sh").as("sha")), "doc_id")
-      .join(ds.select(col("doc_id").as("hist_id"), col("sh").as("shb")), "hist_id")
-      .withColumn("jaccard",
-        size(array_intersect(col("sha"), col("shb"))).cast("double") /
-        size(array_union(col("sha"), col("shb"))).cast("double"))
-      .filter(col("jaccard") >= 0.6)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        max(struct(round(col("jaccard"), 6).as("j"), (-col("hist_id")).as("nid")))
-          .as("best"))
-      .select(col("doc_id"), col("n_matches"),
-        (-col("best.nid")).as("best_match_id"), col("best.j").as("best_jaccard"))
+    val buckets = minhashBuckets(ds)
+    nearDupGate(ds, buckets.filter(col("doc_id") % 2 === 1),
+        ds, buckets.filter(col("doc_id") % 2 === 0))
       .orderBy(col("doc_id"))
   }
 

@@ -136,30 +136,35 @@ object Planted {
     * ~0.5 MB at sf0.1) runs it once; output unchanged.
     *
     * Round 15 (VERDICT r14 item 4, guide §5): the materialization is
-    * `persist(MEMORY_AND_DISK)` + count, NOT `localCheckpoint` — this
-    * frame GROWS WITH THE CORPUS, and a local checkpoint stores
-    * unreplicated executor-local partitions with the lineage severed:
-    * at 100 TB one lost executor kills the whole query. Persist keeps
-    * the lineage, so a lost block recomputes. The row functions
-    * materialize their (tiny, contract-sized) result and explicitly
-    * unpersist via [[withPinned]], so a long driver session never
-    * accumulates CacheManager entries. */
-  private def pinned(df: DataFrame): DataFrame =
-    // lazily persisted: the first consumer materializes each partition
-    // under the block-manager's get-or-compute lock, later consumers read
-    // the cache — single execution of the subtree without the extra
-    // eager count() pass localCheckpoint(true) needed
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Eagerly materialize a contract-sized `result` (localCheckpoint — the
-    * KB-scale frames are exactly where localCheckpoint is right), then
-    * release the corpus-scale persisted inputs that produced it. */
-  private def withPinned(big: DataFrame*)(result: => DataFrame): DataFrame =
-    try result.localCheckpoint(true)
-    finally big.foreach { f => f.unpersist(false); () }
+    * `persist(MEMORY_AND_DISK)`, NOT `localCheckpoint` — this frame
+    * GROWS WITH THE CORPUS, and a local checkpoint stores unreplicated
+    * executor-local partitions with the lineage severed: at 100 TB one
+    * lost executor kills the whole query. Persist keeps the lineage, so
+    * a lost block recomputes.
+    *
+    * `pinning` runs a row body that may `pin` (persist) corpus-scale
+    * frames, eagerly materializes the body's (tiny, contract-sized)
+    * result with `localCheckpoint` — the KB-scale frames are exactly
+    * where localCheckpoint is right — and unpersists every pinned frame
+    * on the way out, on success AND on failure: each persist happens
+    * inside the guarded region, so a body that throws after pinning
+    * (a failing centroid fit, a join set-up error) cannot leave a
+    * CacheManager entry behind in a long driver session. Frames are
+    * persisted lazily: the first consumer materializes each partition
+    * under the block manager's get-or-compute lock and later consumers
+    * read the cache. */
+  private[graft] def pinning(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      held += df
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    try body(pin).localCheckpoint(true)
+    finally held.foreach { f => f.unpersist(false); () }
+  }
 
   private def plantedVectors(s: SparkSession, d: String): DataFrame =
-    pinned(plantedCorpus(s, d).select(col("vec_id"), col("embedding")))
+    plantedCorpus(s, d).select(col("vec_id"), col("embedding"))
 
   // --- tight recall contracts over the planted corpus -----------------
 
@@ -169,22 +174,22 @@ object Planted {
     * Within-label θ ≈ 30–40° ⇒ per-plane collision ≈ 0.8, any-of-16-
     * tables ≳ 0.97 per true neighbor — the regime the s02 scaladoc
     * promises "supports sharper filtering". */
-  def s17PlantedLsh(s: SparkSession, d: String): DataFrame = {
-    val pc = plantedVectors(s, d)
-    withPinned(pc)(Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.lshTopKOn(pc), PlantedFloor))
+  def s17PlantedLsh(s: SparkSession, d: String): DataFrame = pinning { pin =>
+    val pc = pin(plantedVectors(s, d))
+    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+      Similarity.lshTopKOn(pc), PlantedFloor)
   }
 
   /** s18: IVF recall in the clustered regime — coarse quantizer trained
     * on the planted corpus (memoized under its own key; the KMeans
     * cells recover the label clusters), probe width unchanged from s03. */
-  def s18PlantedIvf(s: SparkSession, d: String): DataFrame = {
-    val pc = plantedVectors(s, d)
+  def s18PlantedIvf(s: SparkSession, d: String): DataFrame = pinning { pin =>
+    val pc = pin(plantedVectors(s, d))
     val centroids = Similarity.memoizedCentroids(s, s"$d#planted") {
       Similarity.fitCoarse(pc)
     }
-    withPinned(pc)(Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.ivfTopKOn(pc, centroids), PlantedFloor))
+    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+      Similarity.ivfTopKOn(pc, centroids), PlantedFloor)
   }
 
   /** Cluster-size-adaptive refine depth (see [[PlantedRefine]]): one
@@ -196,19 +201,19 @@ object Planted {
   /** s19: PQ(8×32)+ADC recall in the clustered regime, refine depth =
     * one cluster (non-vacuous at every SF: 10 % of the corpus, where
     * the isotropic row's 500-row refine IS the corpus at sf0.01). */
-  def s19PlantedPq(s: SparkSession, d: String): DataFrame = {
-    val pc = plantedVectors(s, d)
-    withPinned(pc)(Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+  def s19PlantedPq(s: SparkSession, d: String): DataFrame = pinning { pin =>
+    val pc = pin(plantedVectors(s, d))
+    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
       Similarity.pqTopKOn(pc, Similarity.PqCodes, clusterRefine(s, d, pc)),
-      PlantedFloor))
+      PlantedFloor)
   }
 
   /** s20: JL-projected (64→32) recall in the clustered regime, same
     * cluster-sized refine as s19. */
-  def s20PlantedJl(s: SparkSession, d: String): DataFrame = {
-    val pc = plantedVectors(s, d)
-    withPinned(pc)(Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.jlTopKOn(pc, clusterRefine(s, d, pc)), PlantedFloor))
+  def s20PlantedJl(s: SparkSession, d: String): DataFrame = pinning { pin =>
+    val pc = pin(plantedVectors(s, d))
+    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+      Similarity.jlTopKOn(pc, clusterRefine(s, d, pc)), PlantedFloor)
   }
 
   // --- s22: the deliberately-hard boundary contract --------------------
@@ -240,15 +245,15 @@ object Planted {
     * EXPECTED to degrade, at the measured-degradation floor
     * [[HardFloor]]. s17-s20 prove the indexes work where they should
     * work; this row proves the harness would notice if they stopped. */
-  def s22PlantedHardIvf(s: SparkSession, d: String): DataFrame = {
+  def s22PlantedHardIvf(s: SparkSession, d: String): DataFrame = pinning { pin =>
     // same §7.2 reuse as plantedVectors, same round-15 persist rationale
-    val hc = pinned(plantedCorpus(s, d, HardAlpha)
+    val hc = pin(plantedCorpus(s, d, HardAlpha)
       .select(col("vec_id"), col("embedding")))
     val centroids = Similarity.memoizedCentroids(s, s"$d#planted-hard") {
       Similarity.fitCoarse(hc)
     }
-    withPinned(hc)(Similarity.recallContractOn(Similarity.bruteTopKOn(hc),
-      Similarity.ivfTopKOn(hc, centroids), HardFloor))
+    Similarity.recallContractOn(Similarity.bruteTopKOn(hc),
+      Similarity.ivfTopKOn(hc, centroids), HardFloor)
   }
 
   // --- d19: planted near-duplicates recovered via LSH candidates ------
@@ -313,7 +318,7 @@ object Planted {
     * 0.52 the bands are separable and the per-pair LSH miss
     * probability is ~10⁻¹², so any count drift means the bucketer
     * broke, not noise. */
-  def d19PlantedNearDup(s: SparkSession, d: String): DataFrame = {
+  def d19PlantedNearDup(s: SparkSession, d: String): DataFrame = pinning { pin =>
     val pc = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val copies = pc.filter(col("vec_id") % CopyMod === 0)
       // deterministic per-copy nudge dimension spreads across positions;
@@ -342,7 +347,7 @@ object Planted {
     // recompute at 100 TB) instead of an unreplicated localCheckpoint;
     // the one-row result below is eagerly materialized and both frames
     // explicitly unpersisted before return.
-    val buckets = pinned(
+    val buckets = pin(
       corpus.select(col("vec_id"), explode(array(sigs: _*)).as("bk"))
         .select(col("vec_id"), col("bk.t").as("t"), col("bk.sig").as("sig")))
     val cand = buckets.join(
@@ -356,7 +361,7 @@ object Planted {
     // d05's round(·,4) threshold convention keeps the admission boundary
     // engine-identical (nothing sits near τ on any test corpus — planted
     // ≥ 0.9987, background ≤ 0.52 — but the convention costs nothing)
-    val found = pinned(cand.join(ea, "a").join(eb, "b")
+    val found = pin(cand.join(ea, "a").join(eb, "b")
       .filter(round(cosine(col("ea"), col("eb")), 4) >= NearDupTau)
       .select(col("a"), col("b")))
     val planted = pc.filter(col("vec_id") % CopyMod === 0)
@@ -371,11 +376,10 @@ object Planted {
     // contract is found ≡ truth, premise-free at any SF
     val nBackground = found.join(planted, Seq("a", "b"), "left_anti")
       .agg(count(lit(1)).as("n_background"))
-    withPinned(buckets, found)(
-      nPlanted.crossJoin(nRecovered).crossJoin(nBackground)
-        .select(col("n_planted"), col("n_recovered"),
-          (col("n_recovered") === col("n_planted")).as("all_recovered"),
-          col("n_background")))
+    nPlanted.crossJoin(nRecovered).crossJoin(nBackground)
+      .select(col("n_planted"), col("n_recovered"),
+        (col("n_recovered") === col("n_planted")).as("all_recovered"),
+        col("n_background"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -1139,7 +1139,7 @@ object StreamReplay {
     * buckets, persisted ONCE — d12's "maintained bucketed table"
     * scaladoc made literal); the batch side (odd ids) drains through the
     * real JSON file source in 4 micro-batches, and every micro-batch
-    * runs the SAME gate code path ([[graft.dedup.Dedup.lshBuckets]] +
+    * runs the SAME gate code path ([[graft.dedup.Dedup.minhashBuckets]] +
     * [[graft.dedup.Dedup.nearDupGate]] — byte-identical bucketing)
     * against the static index inside `foreachBatch`, appending its
     * flags to the sink. A doc's decision depends only on (doc, history),
@@ -1165,7 +1165,7 @@ object StreamReplay {
           graft.functions.ShingleFunctions.shingles3(col("text")).as("sh"))
       val hist = shingled(Tables.documents(s2, d)
         .filter(col("doc_id") % 2 === 0)).persist()
-      val histBk = Dedup.lshBuckets(hist).persist()
+      val histBk = Dedup.minhashBuckets(hist).persist()
       hist.count(); histBk.count()
       val feed = Tables.documents(s2, d).filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("text"),
@@ -1182,7 +1182,7 @@ object StreamReplay {
       val q = source.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val bSh = shingled(batch)
-          Dedup.nearDupGate(bSh, Dedup.lshBuckets(bSh), hist, histBk)
+          Dedup.nearDupGate(bSh, Dedup.minhashBuckets(bSh), hist, histBk)
             .write.mode("append").parquet(s"$tmp/out")
           ()
         }

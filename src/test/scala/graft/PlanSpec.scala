@@ -92,6 +92,19 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("ReusedExchange"), plan)
   }
 
+  test("d03: the signature is the band kernel — no min(...) signature aggregate in the plan") {
+    val plan = executed(graft.dedup.Dedup.d03MinHashLsh(spark, sf))
+    assert(plan.contains("minhashbands("), plan)
+    assert(!plan.contains("min("), plan)
+  }
+
+  test("d02: the over-cap split is a semi/anti join on the one over-cap hash set — no Window") {
+    import graft.dedup.Dedup
+    val plan = executedFull(Dedup.d02Over(Dedup.hostileDocs(spark, sf)))
+    assert(!plan.contains("Window"), plan)
+    assert(plan.contains("LeftSemi"), plan)
+  }
+
   test("m01: media meta accounting is one scan + one aggregation exchange") {
     val plan = executed(graft.multimodal.MultimodalQueries.m01MediaMeta(spark, sf))
     assert(plan.linesIterator.count(_.contains("Scan parquet")) == 1, plan)

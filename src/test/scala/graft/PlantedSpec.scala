@@ -133,4 +133,33 @@ class PlantedSpec extends SparkSpec {
       .agg(min("cos")).as[Double].head()
     assert(band > Planted.NearDupTau + 0.03, s"planted band min $band")
   }
+
+  test("pinning: a body that throws after pinning leaves no cached frame behind") {
+    import org.apache.spark.storage.StorageLevel
+    val frame = spark.range(0, 1000, 1, 2).select((col("id") * 7).as("pin_probe"))
+    val err = intercept[IllegalStateException] {
+      Planted.pinning { pin =>
+        val pc = pin(frame)
+        // the persist registered a CacheManager entry and blocks exist
+        assert(pc.storageLevel == StorageLevel.MEMORY_AND_DISK)
+        assert(pc.count() == 1000)
+        throw new IllegalStateException("centroid fit failed")
+      }
+    }
+    assert(err.getMessage == "centroid fit failed")
+    assert(frame.storageLevel == StorageLevel.NONE,
+      "a throwing body left its pinned frame in the CacheManager")
+  }
+
+  test("pinning: the result is materialized and every pinned frame released") {
+    import org.apache.spark.storage.StorageLevel
+    val a = spark.range(0, 500, 1, 2).select((col("id") * 3).as("pin_a"))
+    val b = spark.range(0, 500, 1, 2).select((col("id") * 5).as("pin_b"))
+    val out = Planted.pinning { pin =>
+      val pa = pin(a); val pb = pin(b)
+      pa.agg(count(lit(1)).as("na")).crossJoin(pb.agg(count(lit(1)).as("nb")))
+    }
+    assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE)
+    assert(out.as[(Long, Long)].collect().toSeq == Seq((500L, 500L)))
+  }
 }
