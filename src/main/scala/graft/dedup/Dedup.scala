@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Observed, Tables}
 import graft.sink.Sinks
 import graft.text.TextAnalysis.{normText, tokens}
 import graft.functions.{MinHashBands, VectorFunctions}
@@ -102,9 +102,10 @@ object Dedup {
     * count decomposes as c = c_subcap + c_overcap. c_subcap falls out of
     * the candidate self-join itself (the old d02 counting form,
     * restricted to sub-cap postings); c_overcap adds the over-cap
-    * postings back per candidate pair through d20's id-keyed
-    * shuffle-hash joins — never a pair-list or index broadcast, and a
-    * no-op frame on corpora with no over-cap shingle. The output equals
+    * postings back per candidate pair as the intersection of the two
+    * docs' over-cap hash arrays, joined to the pairs by id with
+    * shuffle-hash joins — never a pair-list or index broadcast, and
+    * never run on corpora with no over-cap shingle. The output equals
     * the cap-free census whenever every true pair shares ≥ 1 sub-cap
     * shingle — proven per run by the cap-FREE DuckDB oracle's hash
     * check (unchanged from the uncapped era) and pinned on this corpus
@@ -113,15 +114,17 @@ object Dedup {
     *
     * Plan shape: shingles are hashed to 64-bit keys immediately (the
     * inverted index never shuffles strings) and eagerly materialized
-    * ONCE (the d20 localCheckpoint discipline) — the df aggregate, the
-    * size aggregate and both split-count sides all read the 16-byte
-    * (doc_id, h) frame. Each index is built once per call: the over-cap
-    * hash set (one `groupBy(h)` count, checkpointed) is both the probe
-    * and the split, whose sides are a `left_anti` and a `left_semi`
-    * join against it (no df window recomputed per consumer), and the
-    * sub-cap pair counts are checkpointed for their two consumers. The
-    * shuffle_hash hint keeps AQE from flipping the self-join to
-    * broadcast, which would clone the build side. */
+    * ONCE (the d20 localCheckpoint discipline) as (doc_id, n, h) rows,
+    * n = the doc's shingle-set size — the df aggregate and both
+    * split-count sides read that frame, and n rides the self-join's
+    * grouping key into the Jaccard denominator, so no doc_id-keyed size
+    * aggregate or size join exists. Each index is built once per call:
+    * the over-cap hash set (one `groupBy(h)` count, checkpointed, its
+    * row count observed on that same job) is both the probe and the
+    * split, whose sides are a `left_anti` and a `left_semi` join against
+    * it (no df window recomputed per consumer). The shuffle_hash hint
+    * keeps AQE from flipping the self-join to broadcast, which would
+    * clone the build side. */
   def d02NgramJaccard(s: SparkSession, d: String): DataFrame =
     d02Over(Tables.documents(s, d))
 
@@ -130,64 +133,63 @@ object Dedup {
     * split-count branch d22 measured) while the natural corpus takes the
     * fast path. */
   private[graft] def d02Over(docs: DataFrame): DataFrame = {
+    // n = size(sh) rides the index: explode emits size(sh) rows per doc,
+    // so n is the doc's posting count without a doc_id-keyed aggregate
     val inv = docShinglesOf(docs)
-      .select(col("doc_id"), explode(col("sh")).as("sg"))
-      .select(col("doc_id"), xxhash64(col("sg")).as("h"))
+      .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
+        explode(col("sh")).as("sg"))
+      .select(col("doc_id"), col("n"), xxhash64(col("sg")).as("h"))
       .localCheckpoint(true)
     // The over-cap split, computed ONCE: the hashes whose df exceeds the
-    // cap, from one map-side-combinable aggregate over the 16-byte frame,
-    // eagerly materialized. Its emptiness is the probe (a bounded 0/1
-    // driver scalar): on a natural corpus (df head 32 < 64) nothing
-    // crosses the cap and the split-count joins would be pure overhead
-    // (the r14 bench measured them at ~3x the uncapped cpu on
-    // d02/d07/d09/g10), so the plan falls back to the uncapped shape off
-    // the SAME checkpointed index, which the cap provably equals then.
-    val overH = inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > DfCap).select(col("h"))
-      .localCheckpoint(true)
-    val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    // cap, from one map-side-combinable aggregate over the index, eagerly
+    // materialized. Its size, observed on that same job, is the probe (an
+    // unreported size takes the split, which is exact either way): on
+    // a natural corpus (df head 32 < 64) nothing crosses the cap and the
+    // split-count joins would be pure overhead (the r14 bench measured
+    // them at ~3x the uncapped cpu on d02/d07/d09/g10), so the plan falls
+    // back to the uncapped shape off the SAME checkpointed index, which
+    // the cap provably equals then.
+    val (overH, overCount) = Observed(
+        inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
+          .filter(col("df") > DfCap).select(col("h")),
+        count(lit(1)))(_.localCheckpoint(true))
+    // candidate pairs with their common count, both set sizes carried
+    // through the grouping key; shuffled-hash, not sort-merge (round 15,
+    // guide §3.1): same buffered-copy elimination as d20's candidate join,
+    // and the hint pins the build side against an AQE broadcast flip
+    def pairCounts(postings: DataFrame, c: String): DataFrame = {
+      val sub = postings.repartition(col("h"))
+      sub.as("a").join(sub.as("b").hint("shuffle_hash"),
+          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.n").as("na"), col("b.n").as("nb"))
+        .agg(count(lit(1)).as(c))
+    }
     val common =
-      if (overH.isEmpty) {
-        val sub = inv.repartition(col("h"))
-        // shuffled-hash, not sort-merge (round 15, guide §3.1): same
-        // buffered-copy elimination as d20's candidate join; the hint
-        // still pins the build side against an AQE broadcast flip
-        sub.as("a").join(sub.as("b").hint("shuffle_hash"),
-            col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("c"))
-      } else {
+      if (overCount.exists(_.getLong(0) == 0L)) pairCounts(inv, "c")
+      else {
         // the split-count form — algebraically d22's full-set verify:
         // c = c_subcap (from the capped candidate self-join itself)
-        //   + c_overcap (over-cap postings added back per pair through
-        //     d20's id-keyed shuffle-hash joins — never a pair-list or
-        //     index broadcast). Both sides of the split are semi/anti
-        //     joins against the one over-cap hash set, and the sub-cap
-        //     pair counts are materialized once for their two consumers.
-        val sub = inv.join(overH, Seq("h"), "left_anti").repartition(col("h"))
+        //   + c_overcap (the over-cap hashes the pair shares). Each doc's
+        //     over-cap hashes are one array on a doc_id-partitioned
+        //     frame, joined to the pairs by id with shuffle-hash joins
+        //     (never a pair-list or index broadcast); docs without an
+        //     over-cap posting have no row and share nothing over the cap.
         val over = inv.join(overH, Seq("h"), "left_semi")
-        val subCommon = sub.as("a").join(sub.as("b").hint("shuffle_hash"),
-            col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("c_sub"))
-          .localCheckpoint(true)
-        val overCommon = subCommon.select(col("doc_a"), col("doc_b"))
-          .join(over.select(col("doc_id").as("doc_a"), col("h")).hint("shuffle_hash"),
-            "doc_a")
-          .join(over.select(col("doc_id").as("doc_b"), col("h")).hint("shuffle_hash"),
-            Seq("doc_b", "h"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("c_over"))
-        subCommon
-          .join(overCommon, Seq("doc_a", "doc_b"), "left")
-          .withColumn("c", col("c_sub") + coalesce(col("c_over"), lit(0L)))
-          .select(col("doc_a"), col("doc_b"), col("c"))
+          .groupBy(col("doc_id")).agg(collect_list(col("h")).as("os"))
+        def overOf(side: String) =
+          over.select(col("doc_id").as(s"doc_$side"), col("os").as(s"os_$side"))
+            .hint("shuffle_hash")
+        pairCounts(inv.join(overH, Seq("h"), "left_anti"), "c_sub")
+          .join(overOf("a"), Seq("doc_a"), "left")
+          .join(overOf("b"), Seq("doc_b"), "left")
+          .withColumn("c", col("c_sub") +
+            when(col("os_a").isNull || col("os_b").isNull, lit(0L))
+              .otherwise(size(array_intersect(col("os_a"), col("os_b"))).cast("long")))
       }
     common
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
       .withColumn("jaccard",
-        col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c")).cast("double"))
+        col("c").cast("double") / (col("na") + col("nb") - col("c")).cast("double"))
       .filter(col("jaccard") >= 0.6)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
@@ -1033,45 +1035,42 @@ object Dedup {
     * would keep both a and c).
     *
     * Distributed min-label propagation (the Pregel shape): every doc
-    * starts labeled with its own id; each round every doc takes the min
-    * of its label and its neighbors' labels; fixpoint = every doc carries
-    * its component's min id. Each round is one join + one aggregate,
-    * shuffling (id, label) pairs only — never document bodies — and the
-    * edge list is materialized once and reused across rounds. The driver
-    * loop iterates ROUNDS (bounded by component diameter), not rows; per
-    * round the work is fully distributed, and `localCheckpoint` truncates
-    * the lineage so round N's plan does not embed rounds 1..N-1.
+    * takes the min of its closed neighborhood as its first label; each
+    * round every doc takes the min of its label and its neighbors'
+    * labels; fixpoint = every doc carries its component's min id. Only
+    * ids, labels and adjacency lists are shuffled — never document
+    * bodies. The driver loop iterates ROUNDS (bounded by component
+    * diameter), not rows.
+    *
+    * One shuffle per round (the bound Kiveris et al. give for a
+    * propagation round): each doc carries its adjacency list in the
+    * label frame, so a round is one aggregate over the messages the docs
+    * send — their label to every neighbor, and their own row to
+    * themselves — with no join (see [[clusterRound]]). A join-based round
+    * would need the labels co-partitioned with a materialized edge list,
+    * and a checkpointed frame reports no partitioning under adaptive
+    * execution, so every such join would add exchanges. `localCheckpoint`
+    * truncates the lineage so round N's plan does not embed rounds
+    * 1..N-1.
+    *
+    * The convergence flag is a count of lowered labels observed on the
+    * round's own checkpoint job ([[graft.Observed]]), so a round is one
+    * distributed pass with no separate emptiness probe.
     *
     * Returns (doc_id, cluster_id, is_rep): every doc that appears in a
     * pair, its component's min doc_id, and whether it IS that minimum
     * (the kept representative). */
   def dupClusters(pairs: DataFrame, maxIter: Int = MaxClusterIters): DataFrame = {
-    val edges = pairs
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint(eager = true) // reused every round
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("lab", col("v"))
-      .localCheckpoint(eager = true)
+    var labels = firstLabels(pairs)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.select(col("v").as("dst"), col("lab")), "dst")
-        .groupBy(col("src").as("v")).agg(min(col("lab")).as("nlab"))
-      // the convergence flag rides the round's own frame: one checkpoint
-      // materializes both the new labels and whether any changed, so each
-      // round costs exactly one distributed pass + one cheap local count
-      // (a separate old-vs-new comparison join would double the per-round
-      // job count)
-      val next = labels
-        .join(neighborMin, Seq("v"), "left")
-        .select(col("v"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"),
-          (coalesce(col("nlab"), col("lab")) < col("lab")).as("changed"))
-        .localCheckpoint(eager = true)
-      converged = next.filter(col("changed")).isEmpty
-      labels = next.drop("changed")
+      val (next, lowered) = Observed(clusterRound(labels),
+        count(when(col("lab") < col("old"), 1)))(_.drop("old").localCheckpoint(eager = true))
+      labels = next
+      // an unreported count keeps iterating: the cap and the star
+      // escalation below still give the exact answer
+      converged = lowered.exists(_.getLong(0) == 0L)
       iter += 1
     }
     // a non-converged propagation means the component diameter exceeds
@@ -1082,6 +1081,35 @@ object Dedup {
     if (!converged) starClusters(pairs)
     else labels.select(col("v").as("doc_id"), col("lab").as("cluster_id"),
       (col("v") === col("lab")).as("is_rep"))
+  }
+
+  /** [[dupClusters]]' first label frame (v, lab, nbrs): every doc of a
+    * pair, the minimum of its closed neighborhood, and its neighbors —
+    * one aggregate over the symmetric edge list. */
+  private[graft] def firstLabels(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .groupBy(col("dst"))
+      .agg(least(col("dst"), min(col("src"))).as("lab"), collect_set(col("src")).as("nbrs"))
+      .select(col("dst").as("v"), col("lab"), col("nbrs"))
+
+  /** One propagation round over a (v, lab, nbrs) label frame: every doc
+    * sends its label to each neighbor and its own row to itself, and one
+    * aggregate by recipient — the round's only exchange — keeps the
+    * minimum label and the adjacency list. `old` is the doc's label
+    * before the round. */
+  private[graft] def clusterRound(labels: DataFrame): DataFrame = {
+    val own = labels.select(col("v"), col("lab"), col("nbrs"))
+    val sent = labels.select(explode(col("nbrs")).as("v"), col("lab"),
+      lit(null).cast(labels.schema("nbrs").dataType).as("nbrs"))
+    own.union(sent)
+      .groupBy(col("v"))
+      .agg(min(col("lab")).as("lab"),
+        min(when(col("nbrs").isNotNull, col("lab"))).as("old"),
+        // only the doc's own row carries its (non-null) neighbors; a
+        // collect keeps the aggregate hash-based (first() over an array
+        // would plan a sort aggregate)
+        flatten(collect_list(col("nbrs"))).as("nbrs"))
   }
 
   /** Round cap for [[starClusters]]: rounds needed is O(log n) in the

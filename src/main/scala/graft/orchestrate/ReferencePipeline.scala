@@ -1,5 +1,6 @@
 package graft.orchestrate
 
+import graft.Observed
 import graft.model.{PipelineConfig, PipelineLayout, PipelineOutcome}
 import graft.quality.Quality
 import graft.quality.Quality.Check
@@ -8,7 +9,7 @@ import graft.state.StateLog
 import graft.transform.Transform
 import graft.validate.SchemaValidator
 import graft.validate.SchemaValidator.Rule
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
 
 /** The reference's end-to-end batch pipeline (SURVEY §3.1), collapsed to
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions.col
   * Gate-before-write ordering (SURVEY §7.4): the processed output is
   * staged under a run-scoped directory and only *promoted* (atomic rename)
   * after the quality gate passes — the transformed data is written once,
-  * scored from the staged files, and never recomputed.
+  * scored by the write job itself, and never recomputed.
   */
 object ReferencePipeline {
 
@@ -38,9 +39,9 @@ object ReferencePipeline {
     val staging = s"${layout.processed}/.staging/$pipelineId"
     val runner = new PipelineRunner(stateLog, config)
 
-    // The gate's score is computed once, from the staged files, and carried
-    // to the Succeed terminal — promote moves those files, so re-reading
-    // after promotion would race the rename.
+    // The gate's score is computed once, by the staged write, and carried
+    // to the Succeed terminal — promote moves the staged files, so
+    // re-reading after promotion would race the rename.
     var gateScore = 0.0
     val flow =
       Flow.Task("validate", SchemaValidator.applyRules(_, spec.rules),
@@ -53,28 +54,34 @@ object ReferencePipeline {
         Flow.Task("archive", { df => Sinks.archive(df, layout.archive, pipelineId); df },
         Flow.Task("transform", spec.transform,
         Flow.Task("stage_output", { df =>
-          // OVERWRITE: a retry after a partial write — or a re-run of the
-          // same pipeline id whose earlier attempt failed the gate —
-          // replaces the stale staging content instead of appending a
-          // duplicate copy that promote would then publish.
-          Sinks.writePartitioned(df, staging, spec.tsCol,
-            org.apache.spark.sql.SaveMode.Overwrite)
-          // score what was actually written; an all-invalid batch stages
-          // zero files, which must fail the gate, not crash the read-back
-          try spark.read.parquet(staging)
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-          }
-        },
-        Flow.Choice("quality_gate",
-          { df => gateScore = Quality.batchScore(df, spec.checks)
-                  gateScore > config.gateThreshold },
+          gateScore = stageScored(df, staging, spec.tsCol, spec.checks); df },
+        Flow.Choice("quality_gate", { _ => gateScore > config.gateThreshold },
           Flow.Task("promote", { df =>
             Sinks.promoteStaged(spark, staging, layout.processed); df },
             Flow.Succeed(_ => gateScore)),
           Flow.Fail("Data quality score below threshold")))))))
 
     runner.run(pipelineId, flow, input)
+  }
+
+  /** Stage `df` under `staging` and return its quality score
+    * ([[Quality.scoreAll]] over exactly the rows written). The score is
+    * observed on the write job itself ([[graft.Observed]]), so scoring
+    * costs no read-back of the staged files and no aggregate job of its
+    * own. An all-invalid batch stages no rows and scores 0.0 (1.0 with no
+    * checks), like any empty frame. An empty write can come back without
+    * the observed score, so that one case scores the frame with an
+    * aggregate of its own.
+    *
+    * OVERWRITE: a retry after a partial write — or a re-run of the same
+    * pipeline id whose earlier attempt failed the gate — replaces the
+    * stale staging content instead of appending a duplicate copy that
+    * promote would then publish. Each attempt observes afresh. */
+  private[graft] def stageScored(df: DataFrame, staging: String, tsCol: String,
+                                 checks: Seq[Check]): Double = {
+    val (_, score) = Observed(df, Quality.scoreAll(checks))(
+      Sinks.writePartitioned(_, staging, tsCol, SaveMode.Overwrite))
+    score.fold(Quality.batchScore(df, checks))(_.getDouble(0))
   }
 
   /** Convenience filter used by tests to inspect quarantined rows. */

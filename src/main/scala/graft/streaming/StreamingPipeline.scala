@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Observed
 import graft.model.PipelineLayout
 import graft.sink.Sinks
 import graft.transform.Transform
@@ -118,17 +119,22 @@ object StreamingPipeline {
         val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(marker)) {
           val staging = s"${layout.processed}/.staging/batch-$batchId"
-          def retried(body: => Unit) =
+          def retried[A](body: => A) =
             graft.orchestrate.Retry.withBackoff(maxRetries, 100L)()(body)
           // The batch frame is backed by the source files: every action on
-          // it (staged write, invalid-empty probe, quarantine, poison path)
-          // would otherwise re-read AND re-parse the source. One epoch-
-          // scoped persist makes the parse happen once per batch.
+          // it (staged write, quarantine, poison path) would otherwise
+          // re-read AND re-parse the source. One epoch-scoped persist makes
+          // the parse happen once per batch.
           batch.persist()
           try {
-          val (valid, invalid) = SchemaValidator.route(batch)
+          val invalid = SchemaValidator.route(batch)._2.drop(SchemaValidator.IsValidCol)
           // Three independently retried phases, each idempotent on its own retry:
-          //  1. stage (OVERWRITE → replaces its own partial output)
+          //  1. stage (OVERWRITE → replaces its own partial output); the
+          //     write job also counts the batch's invalid rows (observed on
+          //     the batch before the route, afresh on every attempt), so
+          //     phase 2 needs no probe job of its own. A write of no valid
+          //     rows can come back without the count; that batch probes
+          //     its invalid rows instead.
           //  2. quarantine invalid (batch-scoped overwrite, see Sinks)
           //  3. promote (resumable: moved files leave staging, so a retry
           //     only moves the remainder — never a second copy)
@@ -136,19 +142,22 @@ object StreamingPipeline {
           // successful earlier phase safe — a whole-body retry would
           // re-stage with fresh part-file names and promote duplicates.
           val result = for {
-            _ <- retried {
-                   val cleaned = valid.drop(SchemaValidator.IsValidCol,
-                     SchemaValidator.ErrorsCol, SchemaValidator.CorruptCol)
-                   stagedWrite match {
-                     case Some(write) => write(cleaned, staging)
-                     case None => Sinks.writePartitioned(
-                       cleaned, staging, mode = org.apache.spark.sql.SaveMode.Overwrite)
+            hasInvalid <- retried {
+                   val (_, nInvalid) = Observed(batch,
+                       count(when(!col(SchemaValidator.IsValidCol), 1))) { observed =>
+                     val cleaned = SchemaValidator.route(observed)._1.drop(SchemaValidator.IsValidCol,
+                       SchemaValidator.ErrorsCol, SchemaValidator.CorruptCol)
+                     stagedWrite match {
+                       case Some(write) => write(cleaned, staging)
+                       case None => Sinks.writePartitioned(
+                         cleaned, staging, mode = org.apache.spark.sql.SaveMode.Overwrite)
+                     }
                    }
+                   nInvalid.fold(!invalid.isEmpty)(_.getLong(0) > 0)
                  }
             _ <- retried {
-                   val inv = invalid.drop(SchemaValidator.IsValidCol)
-                   if (!inv.isEmpty)
-                     Sinks.quarantine(inv, layout.errors, "stream_validation", s"batch-$batchId")
+                   if (hasInvalid)
+                     Sinks.quarantine(invalid, layout.errors, "stream_validation", s"batch-$batchId")
                  }
             _ <- retried(Sinks.promoteStaged(spark, staging, layout.processed))
           } yield ()

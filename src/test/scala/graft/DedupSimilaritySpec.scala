@@ -129,6 +129,25 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out.forall(_._2 == 0L), out.filter(_._2 != 0L).take(5).mkString(","))
   }
 
+  test("dup clusters: one call runs two jobs per propagation round, one more for the first, and the collect") {
+    // components {1,2,3} (diameter 2) and {10,11}: the first labels close
+    // one hop, round 1 lowers node 3's label, round 2 changes nothing.
+    // Jobs: one map stage per exchange (the first labels' and each
+    // round's), one checkpoint per round, and the collect.
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val (out, jobs) = jobsLaunchedBy(Dedup.dupClusters(pairs)
+      .select("doc_id", "cluster_id", "is_rep").as[(Long, Long, Boolean)].collect())
+    assert(out.toSet == Set((1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+      (10L, 10L, true), (11L, 10L, false)))
+    assert(jobs == 1 + 2 * 2 + 1, s"$jobs jobs")
+  }
+
+  test("dup clusters and d02: an empty input has no clusters and no pairs") {
+    val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    assert(Dedup.dupClusters(none).collect().isEmpty)
+    assert(Dedup.d02Over(Seq.empty[(Long, String)].toDF("doc_id", "text")).collect().isEmpty)
+  }
+
   test("starClusters matches propagation on the real near-dup pair graph") {
     import org.apache.spark.sql.functions.col
     val pairList = Dedup.d02NgramJaccard(spark, sf).select(col("doc_a"), col("doc_b"))

@@ -137,15 +137,60 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("all-invalid input fails the gate instead of crashing the read-back") {
+    // no rows reach the staged write: its observed score is 0.0, the gate
+    // fails, and scoring an empty write does not block
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val checks = Seq(Check("nonneg", col("value") >= 0))
+    val events = Tables.events(spark, sf).limit(50)
+    val dir = Files.createTempDirectory("graft-gate").toString
+    // no rows reach the write: filtered at run time, and statically empty
+    val noRows = Seq(events.filter(col("value") > 1e9), events.limit(0))
+    val scores = noRows.zipWithIndex.flatMap { case (df, i) =>
+      Seq(checks, Nil).map(cs => Await.result(
+        Future(ReferencePipeline.stageScored(df, s"$dir/s$i", "ts", cs)), 2.minutes))
+    }
+    assert(scores == Seq(0.0, 1.0, 0.0, 1.0)) // no checks: vacuously 1.0
     val layout = freshLayout()
     val stateLog = new StateLog(spark, layout.state)
     val spec = ReferencePipeline.Spec(
       rules = Seq(Rule("impossible", col("value") > 1e9)), // everything invalid
       transform = Transform.derivePartitions("ts"),
-      checks = Seq(Check("nonneg", col("value") >= 0)))
-    val out = ReferencePipeline.run("allbad", Tables.events(spark, sf).limit(50),
-      spec, layout, stateLog, fastConfig)
+      checks = checks)
+    val out = Await.result(Future(ReferencePipeline.run("allbad", events,
+      spec, layout, stateLog, fastConfig)), 2.minutes)
     assert(out == PipelineOutcome.Failed("Data quality score below threshold"))
+    val published = Option(new java.io.File(layout.processed).listFiles()).getOrElse(Array.empty)
+    assert(!published.exists(_.getName.startsWith("year=")), published.mkString(","))
+  }
+
+  test("an observed metric reads back, and the session stays serializable") {
+    // Spark ML's training summaries capture the session in task closures
+    val (rows, n) = Observed(spark.range(10).toDF("x"), count(lit(1)), sum(col("x")))(_.collect())
+    assert(rows.length == 10 && n.map(r => (r.getLong(0), r.getLong(1))).contains((10L, 45L)))
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+  }
+
+  test("reference pipeline: one run launches only its three writes' jobs") {
+    val layout = freshLayout()
+    val stateLog = new StateLog(spark, layout.state)
+    val input = Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 5.0),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), 400.0),
+      (3L, java.sql.Timestamp.valueOf("2024-01-02 09:00:00"), 7.0)).toDF("id", "ts", "value")
+    val spec = ReferencePipeline.Spec(
+      rules = Seq(Rule("value_le_300", col("value") <= 300.0)),
+      transform = Transform.derivePartitions("ts"),
+      checks = Seq(Check("value_nonneg", col("value") >= 0)))
+    val (outcome, jobs) = jobsLaunchedBy(
+      ReferencePipeline.run("jobs1", input, spec, layout, stateLog, fastConfig))
+    assert(outcome == PipelineOutcome.Succeeded(1.0), outcome)
+    // quarantine write, archive write, and the staged write (its
+    // partition exchange's map stage + the write); the gate reads the
+    // score the staged write observed
+    assert(jobs == 4, s"$jobs jobs")
+    assert(spark.read.parquet(layout.processed).count() == 2)
   }
 
   test("cancellation is not retried and final status stays CANCELLED") {
@@ -272,27 +317,15 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("journal appends, and opening the journal, launch no Spark job") {
-    val sc = spark.sparkContext
     val log = new StateLog(spark, freshLayout().state)
-    val group = s"statelog-no-jobs-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "journal appends")
-    try {
+    val (journal, jobs) = jobsLaunchedBy {
       log.append("j1", "pipeline", PipelineStatus.Running)
       log.append("j1", "validate", PipelineStatus.Succeeded, null)
       assert(log.appendDetail("j1", "pipeline", "updated: x").isDefined)
-      val journal = log.journal() // known schema: no inference job
-      // a sentinel job in the same group: job events reach the status
-      // tracker in submission order, so once the sentinel shows up any job
-      // an append had launched would show up too
-      val sentinel = sc.parallelize(Seq(1), 1).countAsync()
-      assert(sentinel.get() == 1L)
-      val sentinelId = sentinel.jobIds.head
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinelId) &&
-        System.nanoTime() < deadline) Thread.`yield`()
-      assert(sc.statusTracker.getJobIdsForGroup(group).toSeq == Seq(sentinelId))
-      assert(journal.count() == 3)
-    } finally sc.clearJobGroup()
+      log.journal() // known schema: no inference job
+    }
+    assert(jobs == 0)
+    assert(journal.count() == 3)
   }
 
   test("state log rolls back in-memory status when the journal write fails") {

@@ -105,6 +105,30 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("LeftSemi"), plan)
   }
 
+  test("d02: the hostile corpus's set sizes ride the index — no doc_id-keyed size aggregate") {
+    import graft.dedup.Dedup
+    val plan = executedFull(Dedup.d02Over(Dedup.hostileDocs(spark, sf)))
+    assert(plan.contains("LeftSemi"), plan) // the split-count branch ran
+    val sizeAgg = """HashAggregate\(keys=\[doc_id#\d+L?\], functions=\[[^\]]*count\(""".r
+    assert(sizeAgg.findFirstIn(plan).isEmpty, plan)
+  }
+
+  test("dupClusters: a propagation round is one shuffle exchange and no broadcast") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.functions.col
+    val pairs = Dedup.d02NgramJaccard(spark, sf).select(col("doc_a"), col("doc_b"))
+      .localCheckpoint(eager = true)
+    // a later round reads the previous round's checkpoint: one exchange;
+    // the first round also runs the first-label aggregate: one more
+    val first = Dedup.firstLabels(pairs)
+    Seq(first.localCheckpoint(eager = true) -> 1, first -> 2).foreach { case (labels, n) =>
+      val plan = executed(Dedup.clusterRound(labels))
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"), plan)
+      assert(plan.linesIterator.count(l => l.contains("Exchange hashpartitioning") &&
+        !l.contains("ReusedExchange")) == n, plan)
+    }
+  }
+
   test("m01: media meta accounting is one scan + one aggregation exchange") {
     val plan = executed(graft.multimodal.MultimodalQueries.m01MediaMeta(spark, sf))
     assert(plan.linesIterator.count(_.contains("Scan parquet")) == 1, plan)

@@ -48,6 +48,45 @@ class StreamingSpec extends SparkSpec {
     assert(quarantined.select("_error_stage").as[String].head() == "stream_validation")
   }
 
+  test("stream sink: a batch with no invalid rows quarantines nothing; invalid rows land once each") {
+    val root = Files.createTempDirectory("graft-stream-inv").toString
+    val layout = PipelineLayout(root)
+    val inDir = s"$root/raw/incoming"
+    new java.io.File(inDir).mkdirs()
+    // one file per micro-batch, oldest first: batch 0 is all valid,
+    // batch 1 holds two invalid rows among three, batch 2 only invalid ones
+    def put(name: String, body: String, mtime: Long): Unit = {
+      val f = java.nio.file.Paths.get(s"$inDir/$name")
+      Files.writeString(f, body)
+      assert(f.toFile.setLastModified(mtime))
+    }
+    put("a.json",
+      """{"id": 1, "ts": "2024-01-01T10:00:00.000Z", "value": 5.0}
+        |{"id": 2, "ts": "2024-01-01T11:00:00.000Z", "value": 6.0}
+        |""".stripMargin, 1000000000000L)
+    put("b.json",
+      """{"id": 3, "ts": "2024-01-01T10:00:00.000Z", "value": -1.0}
+        |{"id": 4, "ts": "2024-01-01T10:30:00.000Z", "value": 7.0}
+        |{"id": 5, "ts": "2024-01-01T11:00:00.000Z", "value": -2.0}
+        |""".stripMargin, 1000000060000L)
+    put("c.json",
+      """{"id": 6, "ts": "2024-01-01T12:00:00.000Z", "value": -4.0}
+        |""".stripMargin, 1000000120000L)
+    val source = StreamingPipeline.jsonFileSource(spark, inDir, schema, maxFilesPerTrigger = 1)
+    val stream = StreamingPipeline.processingStream(source,
+      Seq(Rule("value_positive", col("value") > 0)))
+    val q = StreamingPipeline.partitionedSink(stream, layout, availableNow = true).start()
+    assert(q.awaitTermination(60000))
+    assert(spark.read.parquet(layout.processed).select("id").as[Long].collect().sorted
+      .sameElements(Seq(1L, 2L, 4L)))
+    val quarantineDirs = new java.io.File(layout.errors).listFiles().map(_.getName).sorted
+    assert(quarantineDirs.sameElements(
+      Seq("b_stream_validation_batch-1", "b_stream_validation_batch-2")),
+      quarantineDirs.mkString(","))
+    val quarantined = graft.sink.Sinks.readQuarantine(spark, layout.errors)
+    assert(quarantined.select("id").as[Long].collect().sorted.sameElements(Seq(3L, 5L, 6L)))
+  }
+
   test("size-budget sink: files roll at the byte budget, layout stays plain K1") {
     // Firehose's "5 MB" half (SDP.py:199-202) at spec scale: five 40-byte
     // rows against a 100-byte budget roll at exclusive prefixes
