@@ -18,7 +18,7 @@ construction (spread >> 1.5x). Other tables are copied from sf0.001 so the
 standard table views resolve. Deterministic (fixed seed).
 
 Usage: python3 scripts/gen_langmix.py <outDir>   # e.g. tmp/langmix
-Then:  sbt "runMain graft.RunOne t28_tokenizer_fertility tmp/langmix tmp/langmix_out"
+Then:  sbt "runMain graft.Verify tmp/langmix tmp/langmix_out t28_tokenizer_fertility"
        python3 scripts/selfcheck.py tmp/langmix tmp/langmix_out
 """
 import os

@@ -17,7 +17,7 @@ are reported as "floor" and never flagged.
 A sweep flag is an IN-SESSION reading: 236 queries share one JVM, and small
 rows swing 2-6x episodically (the d07-family pattern). The adjudication
 channel (VERDICT r11 item 3) is a SOLO probe at both SFs — run
-`runMain graft.BenchProbe <sfDir> <q1,q2,...>` at each SF (it writes
+`runMain graft.Probe time <sfDir> <q1,q2,...>` at each SF (it writes
 tmp/probe_<sf>.json) and pass the files via --probe-lo/--probe-hi: a row
 whose SOLO exponent is linear is reclassified `probe_adjudicated` instead of
 flagged, with both exponents printed side by side.
@@ -58,7 +58,7 @@ probe_hi = json.load(open(probe_hi_path)) if probe_hi_path else {}
 lo = json.load(open(lo_path))
 hi = json.load(open(hi_path))
 
-# Probe files must be FOR the SFs being swept (ADVICE r12): BenchProbe
+# Probe files must be FOR the SFs being swept (ADVICE r12): `Probe time`
 # stamps 'sf' with the sf-dir basename; a wrong-SF probe file would
 # compute a meaningless alpha_probe that silently un-flags a genuine
 # superlinear row. Fail loudly instead.
@@ -122,7 +122,7 @@ for q, t_hi in hi["queries"].items():
         "by_construction": cost.get(q) == "quadratic",
         "floor": t_hi < FLOOR_SEC,
     })
-    # solo-probe override (VERDICT r11 item 3): if BenchProbe artifacts for
+    # solo-probe override (VERDICT r11 item 3): if `Probe time` artifacts for
     # both SFs cover this row, its SOLO exponent adjudicates the in-session
     # one — episodic session effects (codegen-cache eviction, GC debt from
     # the 200 preceding queries) don't exist in a solo probe.

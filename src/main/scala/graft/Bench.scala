@@ -314,19 +314,6 @@ object Bench {
       tasks.incrementAndGet(); ()
     }
     def snapshot: (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
-    /** Listener-bus delivery is async; wait for the counters to go quiet
-      * (outside the timed window) before reading a delta. */
-    def settle(): Unit = {
-      var prev = snapshot
-      var same = 0
-      var spins = 0
-      while (same < 2 && spins < 100) {
-        Thread.sleep(10)
-        val cur = snapshot
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-        spins += 1
-      }
-    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -337,7 +324,6 @@ object Bench {
     // self-flags every run as contaminated.
     val envPre = (loadAvg, cpuPsiAvg10, procCount, System.currentTimeMillis())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // The committed clean-run cpu baseline for this SF (the 1b sentinel
     // lever's reference). Loaded up front so both the heal pass and the
     // final verdict read the same map — and so a DISARMED sentinel is
@@ -372,65 +358,7 @@ object Bench {
         s"WARNING: wall-inflation sentinel DISARMED — $benchBaselinePath " +
           "has no wall column; refresh it (scripts/refresh_cpu_baseline.py) " +
           "from clean solo artifacts to arm the g23-class lever.")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate clones generator child expressions into
-      // pushed filters; for the interpreted HOF shingle pipelines that
-      // re-evaluates a full linear pass per scan for zero pruning value.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // AQE coalescing floor — a LOCAL-bench parallelism guard, not a
-      // scale tunable (at production SF partitions dwarf any floor).
-      // History: round 6 set 64k because Spark's default 1 MB floor
-      // collapsed byte-tiny/CPU-dense shuffles to 1-2 tasks and
-      // serialized the compute (5-query hot sample: 5.47 → 4.63 s).
-      // Round 14 re-measured with a JFR profile: each task of the many
-      // 32-partition micro-shuffles carries a ~0.2 cpu-s constant
-      // (shuffle stream setup/serialization, BypassMergeSortShuffleWriter
-      // per-reducer files), so the 64k floor over-parallelised the SAME
-      // shuffle class it was protecting. Full-surface A/B at sf0.1
-      // (248 rows, clean solos): 64k = 222.3 s / 740 cpu-s vs 256k =
-      // 194.3 s / 608 cpu-s — wins on 2/3 of rows, CPU −18 %; the only
-      // sustained regressions were the three write-parallelism-bound
-      // rows (st15/x01/x02), which pin the narrow floor per-session at
-      // the call site. 1 MB-class floors re-serialize d22's dense stage
-      // (1.87 → 4.22 s) — 256k is the measured optimum between the two
-      // failure modes. Env knob for A/B; set in the BUILDER so cloned
-      // sessions inherit it. See OPTIMIZATION_r14.md.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "256k"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MPB", "128m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OCB", "4194304"))
-      // r14's JFR profile put BypassMergeSortShuffleWriter stream setup /
-      // per-(map-task × reducer) shuffle-file constants high in the CPU
-      // leaves: with ≤ 200 reduce partitions every local shuffle takes
-      // the bypass writer (one file per reducer per map task — M×R tiny
-      // files). Env knob for the round-15 A/B: 0 forces the sort-based
-      // writer (one output file per map task), which is also the writer
-      // every production-scale shuffle (R ≫ 200) uses anyway.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "200"))
-      // AQE otherwise stays at defaults DELIBERATELY — both directions
-      // were measured at sf0.1 and rejected:
-      //  - coalescePartitions.parallelismFirst=false (size-based
-      //    coalescing) collapses the tiny shuffles to 1-6 partitions and
-      //    serializes the partitioned write and the dedup self-joins
-      //    (st01 7.5 s → 13.5 s, d02 1.3 s → 2.8 s);
-      //  - adaptive.enabled=false removes the per-stage replan barriers
-      //    but loses runtime coalescing and is net SLOWER (like-for-like
-      //    32.5 s → 34.8 s);
-      //  - shuffle.partitions=8 (vs cpus=32) trades tiny-shuffle
-      //    scheduling overhead for parallelism and LOSES (18-query
-      //    sample at sf0.1: 20.5 s → 23.5 s, round 5) — the per-query
-      //    floor is job scheduling, not shuffle-partition count.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     // Warm-up: pay executor spin-up + whole-stage-codegen compilation +
     // JIT outside the timed runs by executing every query once at the
     // smallest SF (Janino compilation of the generated code is 2-5 s for
@@ -458,7 +386,6 @@ object Bench {
     // wall α ~1.7). The noop write's root exec carries numOutputRows;
     // read it off the listener bus after each run.
     val lastRows = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val rowsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       private def rowsOf(p: org.apache.spark.sql.execution.SparkPlan): Option[Long] =
         p.metrics.get("numOutputRows").map(_.value).orElse {
@@ -474,10 +401,9 @@ object Bench {
                              d: Long): Unit = {
         try lastRows.set(rowsOf(qe.executedPlan).getOrElse(-1L))
         catch { case _: Throwable => lastRows.set(-1L) }
-        rowsSeq.incrementAndGet(); ()
       }
       override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = { rowsSeq.incrementAndGet(); () }
+                             e: Exception): Unit = ()
     })
     val envStart =
       (loadAvg, cpuPsiAvg10, procCount, System.currentTimeMillis())
@@ -515,27 +441,20 @@ object Bench {
         try { runToNoop(fn(spark, sfDir)) } catch { case _: Throwable => () }
         ((System.nanoTime() - t0) / 1e9, jvmCpuSec - c0, gcMillis - g0)
       }
+      // listener-bus delivery is async: drain it (outside the timed
+      // window) before reading a delta. A query may run MULTIPLE
+      // executions (internal counts before the final noop write); after
+      // the drain the last one seen is the noop write, whose root
+      // numOutputRows is the query's output size.
+      def drain(): Unit = org.apache.spark.GraftAccess.drainListenerBus(spark.sparkContext)
       val cg0 = codegenCompiles
       val first = once()
-      counter.settle()
+      drain()
       val (j0, s0, t0) = counter.snapshot
       val second = once()
-      counter.settle()
+      drain()
       val (j1, s1, t1) = counter.snapshot
       val cg1 = codegenCompiles
-      // the execution-listener bus is async, and a query may run MULTIPLE
-      // executions (internal counts before the final noop write): wait for
-      // the rows counter to go QUIET — the last event is the noop write,
-      // whose root numOutputRows is the query's output size
-      var quiet = 0
-      var spins = 0
-      var prevSeq = rowsSeq.get()
-      while (quiet < 2 && spins < 100) {
-        Thread.sleep(10)
-        val cur = rowsSeq.get()
-        if (cur == prevSeq) quiet += 1 else { quiet = 0; prevSeq = cur }
-        spins += 1
-      }
       val best = if (first._1 <= second._1) first else second
       val worse = if (first._1 <= second._1) second else first
       provenance(name) = (j1 - j0, s1 - s0, t1 - t0, best._2,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,17 +12,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.envCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -44,19 +33,22 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Filtered mode covers every query already dumped into outDir (this
+    // run's and earlier ones'), so incremental dumps stay checkable with
+    //   python3 scripts/selfcheck.py <sfDir> <outDir>
+    val dumped: String => Boolean = if (only.isEmpty) _ => true else
+      Option(new java.io.File(outDir).listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(_.getName).toSet
+    def write(file: String, m: Map[String, String]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    write("oracle_sql.json", SparkEntry.oracleSql.filter(kv => dumped(kv._1)))
     // Bench-cut tags next to the oracle SQL so duckbench.py derives the
     // like-for-like cut from the repo's single source of truth.
-    val tags = SparkEntry.benchTags
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/bench_tags.json"), tags)
+    write("bench_tags.json", SparkEntry.benchTags)
     // Oracle cost classes so duckbench can skip the deliberately
     // brute-force oracles above a scale threshold (--skip-quadratic).
-    val cost = SparkEntry.oracleCost
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_cost.json"), cost)
+    write("oracle_cost.json", SparkEntry.oracleCost)
     spark.stop()
   }
 }

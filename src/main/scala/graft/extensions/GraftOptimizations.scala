@@ -68,7 +68,6 @@ object SmallGlobalSort extends Rule[LogicalPlan] {
   * Idempotent. */
 object GraftOptimizations {
   def register(spark: SparkSession): Unit = {
-    if (sys.env.contains("SPARK_GRAFT_NO_SMALLSORT")) return // dev A/B knob
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_ eq SmallGlobalSort))
       spark.experimental.extraOptimizations = cur :+ SmallGlobalSort

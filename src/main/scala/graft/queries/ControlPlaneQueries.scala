@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.catalog.CatalogSync
 import graft.model.PipelineLayout
 import graft.orchestrate.ReferencePipeline
@@ -56,9 +56,7 @@ object ControlPlaneQueries {
       // staged write's parallelism now comes from Sinks.writePartitioned's
       // explicit repartition (floor-insensitive by construction), so the
       // row no longer needs a per-query AQE config patch.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
+      val s2 = Session.isolated(s)
       val ev = Tables.events(s2, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
       val layout = PipelineLayout(s"$tmp/lake")
@@ -94,9 +92,7 @@ object ControlPlaneQueries {
     withTmp(s, "graft-x02-") { tmp =>
       // Round 15: narrow-floor pin removed — see x01 (the write path's
       // explicit repartition made the floor irrelevant to this row).
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
+      val s2 = Session.isolated(s)
       val ev = Tables.events(s2, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
       Sinks.writePartitioned(ev, s"$tmp/t")
@@ -260,11 +256,9 @@ object ControlPlaneQueries {
           val outcome = service.await(id)
           require(outcome.exists(_.isSuccess), s"x05 lane $n failed: $outcome")
         }
-        // listener delivery is async — poll (bounded) until both job
-        // groups' pool observations arrived
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (ids.exists(i => !pools.containsKey(i._2)) &&
-               System.nanoTime() < deadline) Thread.sleep(20)
+        // listener delivery is async — drain the bus so both job groups'
+        // pool observations have arrived
+        org.apache.spark.GraftAccess.drainListenerBus(s.sparkContext)
         val perLane = ids.map { case (name, id) =>
           // the full journal (list() serves only the latest row per id):
           // exactly two appends — submitted, succeeded

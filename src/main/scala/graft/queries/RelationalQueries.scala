@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -619,10 +619,7 @@ object RelationalQueries {
     * role). The aggregate after the join is exact integers, so the
     * oracle is a plain SQL restatement. */
   def q45SkewJoin(s: SparkSession, d: String): DataFrame = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone", "UTC"))
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // thresholds sized to COMPRESSED shuffle bytes at toy SF (the stats
     // AQE reads are post-lz4: the 10k-row hot partition is ~10 KB)

@@ -220,7 +220,7 @@ object Planted {
 
   /** s22 mixing weight — deliberately pushed DOWN until the within/cross
     * label bands nearly touch (the r9 lesson: a contract that never
-    * bites is weak evidence). Swept with RecallProbe's HARD-IVF mode:
+    * bites is weak evidence). Swept with `graft.Probe recall`'s HARD-IVF rows:
     * α 0.35+ still measures worst-query recall 0.9–1.0 everywhere;
     * α = 0.20 is the first stable degradation point — worst-query
     * recall 0.80 / 0.80 / 0.70 at sf0.01 / sf0.1 / sf0.3 (mean

@@ -880,7 +880,7 @@ object Similarity {
     * product, the top [[PqRefine]] candidates re-rank exactly. Sized so
     * the refine join stays trivial (≤ 500 ids/query) while covering the
     * ADC ranking noise on this near-orthogonal corpus. Measured recall
-    * grid at sf0.1 (worst query / mean over 5 queries, RecallProbe):
+    * grid at sf0.1 (worst query / mean over 5 queries, `graft.Probe recall`):
     * 16×200 0.50/0.74, 16×500 0.80/0.86, 32×200 0.70/0.84,
     * 32×500 0.90/0.96 — shipped config is 32×500; sf0.01 is 1.00/1.00. */
   val PqRefine = 500

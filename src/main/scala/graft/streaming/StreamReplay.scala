@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.model.PipelineLayout
 import graft.sink.Sinks
 import graft.validate.SchemaValidator.Rule
@@ -121,10 +121,7 @@ object StreamReplay {
     // (d06 sizes its bucket count from this conf). At production scale
     // this knob is sized to key cardinality, and the checkpoint records
     // it per query.
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone", "UTC"))
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
     import s2.implicits._
     val qname = "graft_st02_" + java.util.UUID.randomUUID().toString.replace("-", "")
     try {
@@ -230,10 +227,7 @@ object StreamReplay {
       // micro-batch for ~720 windows × 5 types of state — 8 partitions
       // carry that comfortably, and the pin can't leak (same rationale
       // as st02).
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         .withColumn("late", hashGate(col("event_id")))
@@ -287,10 +281,7 @@ object StreamReplay {
   def st04FanoutReplay(s: SparkSession, d: String): DataFrame = withReplayTmp(s, "graft-st04-") { tmp =>
     val qname = "graft_st04_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // cloned session, narrow stateful shuffle (same rationale as st02/st03)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.session.timeZone",
-      s.conf.get("spark.sql.session.timeZone", "UTC"))
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
     try {
       val ev = Tables.events(s, d).filter(col("ts") < lit(FanoutFeedEnd).cast("timestamp"))
       ev.write.mode("overwrite")
@@ -400,10 +391,7 @@ object StreamReplay {
   def st06DedupReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st06-") { tmp =>
       // cloned session, narrow stateful shuffle (same rationale as st02)
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d).select(col("user_id"), col("event_type"), col("ts"))
       stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
         baseModTime = 1000000L)
@@ -453,10 +441,7 @@ object StreamReplay {
       // cloned session, narrow stateful shuffle (same rationale as st03):
       // merging-session state opens one store per shuffle partition per
       // micro-batch — 8 partitions carry ~150 users comfortably.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(SessionFeedEnd).cast("timestamp"))
         .select(col("user_id"), col("ts"))
@@ -510,10 +495,7 @@ object StreamReplay {
   def st08JoinReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st08-") { tmp =>
       // cloned session, narrow stateful shuffle (same rationale as st02)
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -570,10 +552,7 @@ object StreamReplay {
     withReplayTmp(s, "graft-st09-") { tmp =>
       import graft.model.PipelineStatus
       import graft.state.{StateLog, StreamMetricsListener}
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(DlqFeedEnd).cast("timestamp"))
         .select(col("event_id"), col("ts"))
@@ -644,10 +623,7 @@ object StreamReplay {
     * before the sink. */
   def st10EnrichReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st10-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
       stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
@@ -706,10 +682,7 @@ object StreamReplay {
     * already walks the expiring state). */
   def st11OuterJoinReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st11-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -774,10 +747,7 @@ object StreamReplay {
     * micro-scaled integers so the four-way reassociation is exact. */
   def st12SummaryReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st12-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("ts"), col("value"))
       stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
@@ -844,10 +814,7 @@ object StreamReplay {
     * integers so the rollup is engine-stable. */
   def st13AsofReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st13-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -904,10 +871,7 @@ object StreamReplay {
   def st14QualityReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st14-") { tmp =>
       import graft.quality.Expectations
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val checks = Expectations.st14Suite
       require(checks.forall(_.mergeable),
         "st14 maintains counters by addition - every check must be mergeable")
@@ -974,9 +938,7 @@ object StreamReplay {
       // partition count (Sinks.writePartitionedSizeBudget), so write
       // parallelism no longer swings with the AQE coalescing floor and
       // the per-query config patch is unnecessary.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
+      val s2 = Session.isolated(s)
       val ev = Tables.events(s2, d)
         .filter(col("ts") < lit(SizeFlushFeedEnd).cast("timestamp"))
       // one staged file → exactly one AvailableNow epoch at ANY SF: rolls
@@ -1029,10 +991,7 @@ object StreamReplay {
     * final merge ranks shards·k candidates — constants, not corpus. */
   def st16ReservoirReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st16-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       import s2.implicits._
       import org.apache.spark.sql.streaming.GroupStateTimeout
       import graft.queries.PipelineQueries
@@ -1156,10 +1115,7 @@ object StreamReplay {
   def st18NearDupReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st18-") { tmp =>
       import graft.dedup.Dedup
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       def shingled(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
           graft.functions.ShingleFunctions.shingles3(col("text")).as("sh"))
@@ -1199,10 +1155,7 @@ object StreamReplay {
 
   def st17TtlReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st17-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s2.implicits._
@@ -1251,10 +1204,7 @@ object StreamReplay {
     * the memory sink sees one row per (key, batch), never per event. */
   def st19DistinctReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st19-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       import s2.implicits._
       val qname = "graft_st19_" + java.util.UUID.randomUUID().toString.replace("-", "")
       try {
@@ -1331,10 +1281,7 @@ object StreamReplay {
     * asserted in RoundTwelveOpsSpec (no SQL form). */
   def st20SaltedReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st20-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s2, d)
         .select(col("event_id"), col("user_id"), col("value"), col("ts"))
       stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
@@ -1385,10 +1332,7 @@ object StreamReplay {
     * across slots is asserted in RoundThirteenOpsSpec (no SQL form). */
   def st21SaltedStateReplay(s: SparkSession, d: String): DataFrame =
     withReplayTmp(s, "graft-st21-") { tmp =>
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone",
-        s.conf.get("spark.sql.session.timeZone", "UTC"))
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
+      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s2.implicits._
