@@ -5,6 +5,7 @@ import org.apache.spark.GraftAccess
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -149,12 +150,23 @@ object Probe {
       f"STREAM $n wall=$wall%.3f batches=${batches.lines.size}" +: batches.lines.toSeq
     }
 
+  /** `qe`'s formatted plan, uncut: Spark shortens field lists past
+    * `spark.sql.debug.maxToStringFields` ("... N more fields"). The
+    * limit is lifted in a copy of the session conf, because intermediate
+    * executions are explained on the listener thread, which does not see
+    * the caller's session. */
+  private def fullPlan(qe: QueryExecution): String = {
+    val conf = qe.sparkSession.sessionState.conf.clone()
+    conf.setConfString("spark.sql.debug.maxToStringFields", Int.MaxValue.toString)
+    SQLConf.withExistingConf(conf)(qe.explainString(FormattedMode))
+  }
+
   private def plan(spark: SparkSession, sfDir: String, fns: Seq[Query]): Seq[String] =
     fns.flatMap { case (n, fn) =>
       val subs = new java.util.concurrent.ConcurrentLinkedQueue[String]
       val l = new QueryExecutionListener {
         override def onSuccess(action: String, qe: QueryExecution, d: Long): Unit = subs.add(
-          s"== $n INTERMEDIATE EXECUTION ${subs.size + 1} ($action) ==\n" + qe.explainString(FormattedMode))
+          s"== $n INTERMEDIATE EXECUTION ${subs.size + 1} ($action) ==\n" + fullPlan(qe))
         override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
       }
       spark.listenerManager.register(l)
@@ -164,7 +176,7 @@ object Probe {
       // collect() runs df's own QueryExecution (a noop write would plan a
       // new one), so the explain below shows AQE's final runtime choices
       df.collect()
-      subs.asScala.toSeq :+ s"== $n FINAL PLAN ==\n${df.queryExecution.explainString(FormattedMode)}"
+      subs.asScala.toSeq :+ s"== $n FINAL PLAN ==\n${fullPlan(df.queryExecution)}"
     }
 
   private def recall(spark: SparkSession, sfDir: String): Seq[String] = {

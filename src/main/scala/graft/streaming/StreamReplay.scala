@@ -2,19 +2,44 @@ package graft.streaming
 
 import graft.{Session, Tables}
 import graft.model.PipelineLayout
+import graft.similarity.Planted
 import graft.sink.Sinks
 import graft.validate.SchemaValidator.Rule
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Driver-checkable batch replays of the streaming path (SURVEY §2.8):
   * the events table is staged as JSON files and run through the REAL
-  * streaming machinery with `Trigger.AvailableNow` (drain everything,
+  * streaming machinery with an AvailableNow drain (drain everything,
   * then stop); the landed result is compared against a purely-batch
   * oracle. Streaming semantics that need wall-clock time (watermark
   * drops, ProcessingTime cadence) stay in StreamingSpec.
+  *
+  * Every row runs through one harness, [[replay]], which owns the
+  * scaffold: the temp dir, the cloned session, the staged JSON feed and
+  * its source, the drains, the memory sinks, and the eager
+  * materialization of the result before the temp dir goes.
+  *
+  * The clone (same SparkContext, isolated SQLConf) pins the stateful
+  * shuffle to 8 partitions. A state store opens (and commits) one store
+  * per shuffle partition per micro-batch; the replays' 15-150 keys (or
+  * st03's ~720 windows × 5 types) do not need the session's full
+  * parallelism, and a replay would pay 4 batches × 32 partition commits
+  * of bookkeeping for near-empty stores. Pinning the width on the shared
+  * session instead would silently resize any concurrently-planned query
+  * that reads it at call time (d06 sizes its bucket count from this
+  * conf). At production scale this knob is sized to key cardinality, and
+  * the checkpoint records it per query. Rows whose cost is a partitioned
+  * write keep the caller's width: st01, st05, st15 and st04's processing
+  * leg. The clone also runs with AQE off: streaming disables AQE anyway,
+  * and a stream started on a session with AQE on logs two warnings
+  * saying so.
   *
   *  - st01 (T1/T6 + K1): file source → rule validation → partition
   *    derivation → checkpointed retry/quarantine partitioned sink →
@@ -41,40 +66,189 @@ object StreamReplay {
     * timestamps are micro-precise — the state tracker's `max(ts)` would
     * silently lose the sub-millisecond digits on the round-trip. */
   val JsonTsFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+  private val JsonOptions = Map("timestampFormat" -> JsonTsFormat)
 
-  /** Stage-and-clean scaffold shared by every replay: a fresh temp dir
-    * for the staged feed/lake, deleted success-or-failure — without a
-    * cleanup failure ever masking the replay's own exception. Results
-    * must be `localCheckpoint`ed inside `body` (the plan's source files
-    * are gone once this returns). */
-  private def withReplayTmp[A](s: SparkSession, prefix: String)(body: String => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(tmp)
-    finally {
-      try {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+  /** What a replay body works with: `s`, the replay's cloned session, and
+    * `tmp`, its temp dir. Feeds are staged under `tmp` as JSON and opened
+    * with the same [[JsonTsFormat]]; every drain checkpoints to
+    * `tmp/ckpt`, so a second drain resumes where the first stopped. `pin`
+    * persists a frame until the replay ends ([[Planted.pinning]]). */
+  private[graft] final class Replay private[streaming] (
+      val s: SparkSession, val tmp: String, row: String,
+      val pin: DataFrame => DataFrame, views: ArrayBuffer[String]) {
+
+    /** Stages `df` into `tmp/incoming` as is, one JSON file per partition. */
+    def stage(df: DataFrame): Unit =
+      df.write.mode("overwrite").options(JsonOptions).json(s"$tmp/incoming")
+
+    /** `tmp/dir` as a JSON file source of `schema` on session `on`,
+      * `perTrigger` files per micro-batch. */
+    def source(schema: StructType, perTrigger: Int, dir: String = "incoming",
+               on: SparkSession = s): DataFrame =
+      StreamingPipeline.jsonFileSource(on, s"$tmp/$dir", schema,
+        maxFilesPerTrigger = perTrigger, options = JsonOptions)
+
+    /** Stages `df` into `tmp/dir` as the ordered feed
+      * ([[stageOrderedJson]]) and opens it, `perTrigger` files per
+      * micro-batch. */
+    def orderedFeed(df: DataFrame, nFiles: Int, perTrigger: Int,
+                    dir: String = "incoming", prefix: String = "a",
+                    baseModTime: Long = 1000000L): DataFrame = {
+      stageOrderedJson(df, nFiles, s"$tmp/$dir", prefix, baseModTime)
+      source(df.schema, perTrigger, dir)
+    }
+
+    /** A query name unique to this run; the memory-sink view of that
+      * name is dropped when the replay ends. */
+    def queryName(): String = {
+      val name = s"graft_${row}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      views += name
+      name
+    }
+
+    /** Starts `w` with AvailableNow on the replay's checkpoint and waits
+      * until it has drained every staged file. */
+    def drain(w: DataStreamWriter[_]): Unit =
+      w.option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+
+    /** Drains `df` in append mode into the parquet table `tmp/out`; that table. */
+    def drainToParquet(df: DataFrame): DataFrame = {
+      drain(df.writeStream.format("parquet").option("path", s"$tmp/out").outputMode("append"))
+      s.read.parquet(s"$tmp/out")
+    }
+
+    /** Drains `ds` in update mode into a memory sink; its table. */
+    def drainToMemory(ds: Dataset[_]): DataFrame = {
+      val name = queryName()
+      drain(ds.writeStream.format("memory").queryName(name).outputMode("update"))
+      s.table(name)
+    }
+
+    /** Drains `ds` in update mode into a noop sink; the surviving state
+      * of `stateVar`, read from the checkpoint's state store. */
+    def drainToState(ds: Dataset[_], stateVar: String): DataFrame = {
+      drain(ds.writeStream.format("noop").outputMode("update"))
+      s.read.format("statestore").option("stateVarName", stateVar).load(s"$tmp/ckpt")
+    }
+
+    /** Drains `source` through a VERSIONED table under `tmp/dir`: per
+      * epoch `partial` summarizes just the batch, `merge` combines it
+      * with the previous version, and the result is written as the next
+      * version. Per-epoch cost is O(|summary| + |batch|), never
+      * O(history). Returns the last version.
+      *
+      * The previous version is addressed by BATCH ID, not driver memory:
+      * epoch b always merges v(b-1) + batch b and overwrites v(b), so a
+      * retried or restart-replayed epoch reproduces exactly the same
+      * version it wrote the first time (a mutable last-written pointer
+      * would double-merge on a same-process retry and orphan history on
+      * a restart-from-checkpoint). */
+    def drainVersioned(source: DataFrame, dir: String)(
+        partial: DataFrame => DataFrame,
+        merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      def version(b: Long) = s"$tmp/$dir/v$b"
+      @volatile var maxBatch = -1L
+      drain(source.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val part = partial(batch)
+        val prev = new Path(version(batchId - 1))
+        val merged =
+          if (batchId > 0 && prev.getFileSystem(s.sparkContext.hadoopConfiguration).exists(prev))
+            merge(s.read.parquet(prev.toString), part)
+          else part
+        merged.write.mode("overwrite").parquet(version(batchId))
+        maxBatch = math.max(maxBatch, batchId)
         ()
-      } catch { case _: Throwable => () }
+      })
+      if (maxBatch < 0) throw new IllegalStateException(s"$row: no micro-batch ran")
+      s.read.parquet(version(maxBatch))
     }
   }
 
+  /** Runs `body` on a fresh [[Replay]] and returns its result
+    * materialized: an eager localCheckpoint through
+    * [[Planted.pinning]], which also releases every frame the body
+    * pinned. The plan reads the temp dir's files and the memory tables,
+    * so it must be materialized before they go; each replay would
+    * otherwise also leak its staged copies of the corpus under /tmp.
+    * Then, success or failure, the clone's streams are stopped, its
+    * memory-sink views dropped and the temp dir deleted, without a
+    * cleanup failure ever masking the body's own exception.
+    * `narrow = false` keeps the caller's shuffle width; `rocksDb` puts
+    * the state store off-heap. */
+  private[graft] def replay(s: SparkSession, row: String, narrow: Boolean = true,
+                            rocksDb: Boolean = false)(body: Replay => DataFrame): DataFrame = {
+    val width = if (narrow) "8" else s.conf.get("spark.sql.shuffle.partitions")
+    val clone = Session.isolated(s, Seq(
+      "spark.sql.shuffle.partitions" -> width,
+      "spark.sql.adaptive.enabled" -> "false") ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"): _*)
+    val tmp = java.nio.file.Files.createTempDirectory(s"graft-$row-").toString
+    val views = ArrayBuffer.empty[String]
+    def quietly(cleanup: => Unit): Unit = try cleanup catch { case NonFatal(_) => () }
+    try Planted.pinning(pin => body(new Replay(clone, tmp, row, pin, views)))
+    finally {
+      quietly(clone.streams.active.foreach(_.stop()))
+      views.foreach(v => quietly { clone.catalog.dropTempView(v); () })
+      quietly {
+        val p = new Path(tmp)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true); ()
+      }
+    }
+  }
+
+  /** Stage `df` into `dir` as range-ordered JSON files with explicit,
+    * strictly ascending modification times. The file source orders files
+    * by (modTime, path); staging in one Spark job gives every part file
+    * the same wall-clock second, so batch order would hinge on path
+    * tie-breaks — an implementation detail. Explicit modtimes make the
+    * batch sequence part of the CONTRACT: file i drains before file i+1,
+    * which is what lets an event-time watermark test state its expected
+    * output deterministically. Files are range-partitioned on `ts`
+    * (file i's max ts ≤ file i+1's min ts), so in-order rows are never
+    * late by construction. */
+  private def stageOrderedJson(df: DataFrame, nFiles: Int, dir: String,
+                               prefix: String, baseModTime: Long): Unit = {
+    val s = df.sparkSession
+    val stage = s"$dir-stage-$prefix"
+    df.repartitionByRange(nFiles, col("ts"))
+      .sortWithinPartitions(col("ts"))
+      .write.mode("overwrite")
+      .options(JsonOptions)
+      .json(stage)
+    val fs = new Path(stage).getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new Path(dir))
+    val parts = fs.listStatus(new Path(stage))
+      .filter(_.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.getName) // part index = ascending ts range
+    parts.zipWithIndex.foreach { case (f, i) =>
+      val dst = new Path(dir, f"$prefix-$i%03d.json")
+      if (!fs.rename(f.getPath, dst))
+        throw new java.io.IOException(s"stageOrderedJson: rename ${f.getPath} -> $dst failed")
+      fs.setTimes(dst, baseModTime + i * 1000L, -1L)
+    }
+    fs.delete(new Path(stage), true)
+    ()
+  }
+
+  /** The processing stream with one always-true rule: the sink-path rows
+    * check the sink's row accounting, so every row must land in
+    * processed/ (p02-style routing is p01's job). */
+  private def acceptAll(source: DataFrame): DataFrame =
+    StreamingPipeline.processingStream(source, Seq(Rule("always_true", lit(true))))
+
   def st01StreamReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st01-") { tmp =>
+    replay(s, "st01", narrow = false) { r =>
       val ev = Tables.events(s, d)
       // stage the table as the landing-zone JSON feed the reference ingests
-      ev.write.mode("overwrite").json(s"$tmp/incoming")
-      val layout = PipelineLayout(s"$tmp/lake")
-      val source = StreamingPipeline.jsonFileSource(
-        s, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1000)
-      // an always-true rule: st01 checks the sink path's row accounting, so
-      // every row must land in processed/ (p02-style routing is p01's job)
-      val stream = StreamingPipeline.processingStream(
-        source, Seq(Rule("always_true", lit(true))))
-      val query = StreamingPipeline
-        .partitionedSink(stream, layout, availableNow = true)
-        .start()
-      query.awaitTermination()
+      r.stage(ev)
+      val layout = PipelineLayout(s"${r.tmp}/lake")
+      StreamingPipeline.partitionedSink(
+        acceptAll(r.source(ev.schema, perTrigger = 1000)), layout, availableNow = true)
+        .start().awaitTermination()
       // Steady-state maintenance on the hard row: compact the partitions
       // the drained window wrote, scoped to the LAST day present (the
       // "touch what the last window wrote, leave cold partitions alone"
@@ -96,9 +270,6 @@ object StreamReplay {
         .groupBy(col("year"), col("month"), col("day"), col("hour"))
         .agg(count(lit(1)).as("n_rows"))
         .orderBy(col("year"), col("month"), col("day"), col("hour"))
-        // materialize before deleting the lake the plan reads from; each
-        // replay otherwise leaks two full copies of events under /tmp
-        .localCheckpoint(eager = true)
     }
 
   /** st02: stateful-tracking replay (T5). The events feed drains through
@@ -110,86 +281,19 @@ object StreamReplay {
     * per key is the row with the largest running count (n and lastTs are
     * both monotone in the batch sequence), and must equal the batch
     * `groupBy(user).agg(count, max(ts))` oracle. */
-  def st02StateReplay(s: SparkSession, d: String): DataFrame = withReplayTmp(s, "graft-st02-") { tmp =>
-    // The state store opens (and commits) one store per shuffle partition
-    // per micro-batch; 15-150 keys do not need the session's full shuffle
-    // parallelism, and the replay would pay 4 batches × 32 partition
-    // commits of bookkeeping for near-empty stores. Pin the stateful
-    // shuffle width in a CLONED session (same SparkContext, isolated
-    // SQLConf) — mutating the shared session's conf would silently
-    // resize any concurrently-planned query that reads it at call time
-    // (d06 sizes its bucket count from this conf). At production scale
-    // this knob is sized to key cardinality, and the checkpoint records
-    // it per query.
-    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-    import s2.implicits._
-    val qname = "graft_st02_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val ev = Tables.events(s2, d).select(col("user_id"), col("ts"))
-      ev.repartitionByRange(8, col("ts"))
-        .write.mode("overwrite")
-        .option("timestampFormat", JsonTsFormat)
-        .json(s"$tmp/incoming")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 2,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val typed = source
-        .select(col("user_id").cast("string"), col("ts"))
-        .as[(String, java.sql.Timestamp)]
-      val query = StreamingPipeline.trackState(typed).writeStream
-        .format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      s2.table(qname)
-        .groupBy(col("key"))
-        .agg(max(col("n")).as("n_events"), max(col("lastTs")).as("last_ts"))
-        .select(col("key").cast("long").as("user_id"),
-          col("n_events"), col("last_ts"))
-        .orderBy(col("user_id"))
-        // materialize before the memory table is dropped below
-        .localCheckpoint(eager = true)
-    } finally {
-      try { s2.catalog.dropTempView(qname); () } catch { case _: Throwable => () }
-    }
-  }
-
-  /** Stage `df` into `dir` as range-ordered JSON files with explicit,
-    * strictly ascending modification times. The file source orders files
-    * by (modTime, path); staging in one Spark job gives every part file
-    * the same wall-clock second, so batch order would hinge on path
-    * tie-breaks — an implementation detail. Explicit modtimes make the
-    * batch sequence part of the CONTRACT: file i drains before file i+1,
-    * which is what lets an event-time watermark test state its expected
-    * output deterministically. Files are range-partitioned on `ts`
-    * (file i's max ts ≤ file i+1's min ts), so in-order rows are never
-    * late by construction. */
-  private[graft] def stageOrderedJson(df: DataFrame, nFiles: Int, dir: String,
-                                      prefix: String, baseModTime: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = df.sparkSession
-    val stage = s"$dir-stage-$prefix"
-    df.repartitionByRange(nFiles, col("ts"))
-      .sortWithinPartitions(col("ts"))
-      .write.mode("overwrite")
-      .option("timestampFormat", JsonTsFormat)
-      .json(stage)
-    val fs = new Path(stage).getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(dir))
-    val parts = fs.listStatus(new Path(stage))
-      .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName) // part index = ascending ts range
-    parts.zipWithIndex.foreach { case (f, i) =>
-      val dst = new Path(dir, f"$prefix-$i%03d.json")
-      if (!fs.rename(f.getPath, dst))
-        throw new java.io.IOException(s"stageOrderedJson: rename ${f.getPath} -> $dst failed")
-      fs.setTimes(dst, baseModTime + i * 1000L, -1L)
-    }
-    fs.delete(new Path(stage), true)
-    ()
+  def st02StateReplay(s: SparkSession, d: String): DataFrame = replay(s, "st02") { r =>
+    import r.s.implicits._
+    val ev = Tables.events(r.s, d).select(col("user_id"), col("ts"))
+    r.stage(ev.repartitionByRange(8, col("ts")))
+    val typed = r.source(ev.schema, perTrigger = 2)
+      .select(col("user_id").cast("string"), col("ts"))
+      .as[(String, java.sql.Timestamp)]
+    r.drainToMemory(StreamingPipeline.trackState(typed))
+      .groupBy(col("key"))
+      .agg(max(col("n")).as("n_events"), max(col("lastTs")).as("last_ts"))
+      .select(col("key").cast("long").as("user_id"),
+        col("n_events"), col("last_ts"))
+      .orderBy(col("user_id"))
   }
 
   /** Hash gate shared by st03/st05: a deterministic ~6 % subset of events
@@ -221,54 +325,22 @@ object StreamReplay {
     * survives the restart: its metadata log carries phase-1 emissions
     * into the final read. */
   def st03WindowedReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st03-") { tmp =>
-      // cloned session, narrow stateful shuffle: the windowed aggregate
-      // opens (and commits) one state store per shuffle partition per
-      // micro-batch for ~720 windows × 5 types of state — 8 partitions
-      // carry that comfortably, and the pin can't leak (same rationale
-      // as st02).
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
+    replay(s, "st03") { r =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
         .withColumn("late", hashGate(col("event_id")))
-      val incoming = s"$tmp/incoming"
-      val feedSchema = new StructType()
-        .add("ts", "timestamp").add("event_type", "string").add("value", "double")
-      def drain(): Unit = {
-        val source = StreamingPipeline.jsonFileSource(
-          s2, incoming, feedSchema, maxFilesPerTrigger = 2,
-          options = Map("timestampFormat" -> JsonTsFormat))
-        val agg = StreamingPipeline.windowedAnalytics(
-          source, "ts", "event_type", "1 hour", lateness = "90 minutes")
-        val q = agg.writeStream
-          .format("parquet")
-          .option("path", s"$tmp/out")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      stageOrderedJson(ev.filter(!col("late")).drop("late", "event_id"),
-        nFiles = 4, incoming, prefix = "a", baseModTime = 1000000L)
-      drain()
-      stageOrderedJson(ev.filter(col("late")).drop("late", "event_id"),
-        nFiles = 1, incoming, prefix = "b", baseModTime = 2000000L)
-      drain()
-      s.read.parquet(s"$tmp/out")
+      def drain(feed: DataFrame): DataFrame = r.drainToParquet(
+        StreamingPipeline.windowedAnalytics(
+          feed, "ts", "event_type", "1 hour", lateness = "90 minutes"))
+      drain(r.orderedFeed(ev.filter(!col("late")).drop("late", "event_id"),
+        nFiles = 4, perTrigger = 2))
+      drain(r.orderedFeed(ev.filter(col("late")).drop("late", "event_id"),
+        nFiles = 1, perTrigger = 2, prefix = "b", baseModTime = 2000000L))
         .groupBy(col("window_start"), col("event_type"))
         .agg(sum(col("n")).as("n"), round(sum(col("sum_value")), 6).as("sum_value"))
         .orderBy(col("window_start"), col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
-  /** st04: fan-out replay (T7) — ONE staged feed, TWO concurrently
-    * draining sink queries (the reference's Firehose main stream + the
-    * realtime fn's analytics stream, SDP.py:296): the partitioned
-    * processed table and a windowed-counts memory sink, each with its own
-    * checkpoint. The output joins both legs' rollups per event type; the
-    * oracle says each leg must have seen every event exactly once —
-    * fan-out duplicates or drops on either leg break the row. */
   /** Feed bound for st04/st05: the corpus's first week / first three
     * days. The rows prove ROUTING semantics (fan-out exactly-once, DLQ
     * recovery), not partitioned-write throughput — st01 already carries
@@ -278,46 +350,40 @@ object StreamReplay {
   val FanoutFeedEnd  = "2024-01-08"
   val DlqFeedEnd     = "2024-01-04"
 
-  def st04FanoutReplay(s: SparkSession, d: String): DataFrame = withReplayTmp(s, "graft-st04-") { tmp =>
-    val qname = "graft_st04_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // cloned session, narrow stateful shuffle (same rationale as st02/st03)
-    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-    try {
-      val ev = Tables.events(s, d).filter(col("ts") < lit(FanoutFeedEnd).cast("timestamp"))
-      ev.write.mode("overwrite")
-        .option("timestampFormat", JsonTsFormat)
-        .json(s"$tmp/incoming")
-      val layout = PipelineLayout(s"$tmp/lake")
-      def source(sess: SparkSession) = StreamingPipeline.jsonFileSource(
-        sess, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1000,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      // the processing leg keeps the FULL session width — it's a
-      // stateless partitioned write whose throughput scales with writer
-      // tasks; only the stateful analytics leg wants the narrow width
-      val processing = StreamingPipeline.processingStream(
-        source(s), Seq(Rule("always_true", lit(true))))
-      // Complete-mode windowed counts: the memory table holds the full
-      // current result, so the final read needs no per-batch bookkeeping.
-      val analytics = source(s2)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val (q1, q2) = StreamingPipeline.fanOut(
-        processing, analytics, layout,
-        analyticsQueryName = qname,
-        analyticsOutputMode = OutputMode.Complete(),
-        availableNow = true)
-      q1.awaitTermination()
-      q2.awaitTermination()
-      val processed = s.read.parquet(layout.processed)
-        .groupBy(col("event_type")).agg(count(lit(1)).as("n_processed"))
-      val windowed = s2.table(qname)
-        .groupBy(col("event_type")).agg(sum(col("n")).as("n_windowed"))
-      processed.join(windowed, Seq("event_type"))
-        .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
-    } finally {
-      try { s2.catalog.dropTempView(qname); () } catch { case _: Throwable => () }
-    }
+  /** st04: fan-out replay (T7) — ONE staged feed, TWO concurrently
+    * draining sink queries (the reference's Firehose main stream + the
+    * realtime fn's analytics stream, SDP.py:296): the partitioned
+    * processed table and a windowed-counts memory sink, each with its own
+    * checkpoint. The output joins both legs' rollups per event type; the
+    * oracle says each leg must have seen every event exactly once —
+    * fan-out duplicates or drops on either leg break the row. */
+  def st04FanoutReplay(s: SparkSession, d: String): DataFrame = replay(s, "st04") { r =>
+    val ev = Tables.events(s, d).filter(col("ts") < lit(FanoutFeedEnd).cast("timestamp"))
+    r.stage(ev)
+    val layout = PipelineLayout(s"${r.tmp}/lake")
+    // the processing leg keeps the FULL session width — it's a
+    // stateless partitioned write whose throughput scales with writer
+    // tasks; only the stateful analytics leg wants the narrow width
+    val processing = acceptAll(r.source(ev.schema, perTrigger = 1000, on = s))
+    // Complete-mode windowed counts: the memory table holds the full
+    // current result, so the final read needs no per-batch bookkeeping.
+    val analytics = r.source(ev.schema, perTrigger = 1000)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    val name = r.queryName()
+    val (q1, q2) = StreamingPipeline.fanOut(
+      processing, analytics, layout,
+      analyticsQueryName = name,
+      analyticsOutputMode = OutputMode.Complete(),
+      availableNow = true)
+    q1.awaitTermination()
+    q2.awaitTermination()
+    val processed = s.read.parquet(layout.processed)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n_processed"))
+    val windowed = r.s.table(name)
+      .groupBy(col("event_type")).agg(sum(col("n")).as("n_windowed"))
+    processed.join(windowed, Seq("event_type"))
+      .orderBy(col("event_type"))
   }
 
   /** st05: DLQ quarantine + replay (K2) as a hard row. A hash-gated ~6 %
@@ -332,33 +398,26 @@ object StreamReplay {
     * ORIGINAL corpus exactly — quarantine that loses a row, or replay
     * that fails to restore one, breaks the row. */
   def st05DlqReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st05-") { tmp =>
+    replay(s, "st05", narrow = false) { r =>
       val ev = Tables.events(s, d).filter(col("ts") < lit(DlqFeedEnd).cast("timestamp"))
-      val line = to_json(
-        struct(ev.columns.map(col).toIndexedSeq: _*),
-        Map("timestampFormat" -> JsonTsFormat))
+      val line = to_json(struct(ev.columns.map(col).toIndexedSeq: _*), JsonOptions)
       // corrupt the gated rows' lines in a REVERSIBLE way (prefix), so
       // replay can repair them — the model for "fix the producer bug,
       // then re-ingest the DLQ backlog"
       ev.select(
         when(hashGate(col("event_id")), concat(lit(CorruptPrefix), line))
           .otherwise(line).as("value"))
-        .write.mode("overwrite").text(s"$tmp/incoming")
-      val layout = PipelineLayout(s"$tmp/lake")
-      val source = StreamingPipeline.jsonFileSource(
-        s, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1000,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val stream = StreamingPipeline.processingStream(
-        source, Seq(Rule("always_true", lit(true))))
-      StreamingPipeline.partitionedSink(stream, layout, availableNow = true)
+        .write.mode("overwrite").text(s"${r.tmp}/incoming")
+      val layout = PipelineLayout(s"${r.tmp}/lake")
+      StreamingPipeline.partitionedSink(
+        acceptAll(r.source(ev.schema, perTrigger = 1000)), layout, availableNow = true)
         .start().awaitTermination()
       // replay: read the quarantined raw payloads, repair, re-parse, land
       val repaired = Sinks.replayQuarantine(s, layout.errors)
         .select(regexp_replace(
           col(graft.validate.SchemaValidator.CorruptCol),
           "^" + java.util.regex.Pattern.quote(CorruptPrefix), "").as("raw"))
-        .select(from_json(col("raw"), ev.schema,
-          Map("timestampFormat" -> JsonTsFormat)).as("r"))
+        .select(from_json(col("raw"), ev.schema, JsonOptions).as("r"))
         .select(col("r.*"))
       Sinks.writePartitioned(repaired, layout.processed)
       s.read.parquet(layout.processed)
@@ -367,7 +426,6 @@ object StreamReplay {
           count(lit(1)).as("n_rows"),
           sum(when(hashGate(col("event_id")), 1L).otherwise(0L)).as("n_recovered"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   /** The reversible corruption marker for st05's staged feed. */
@@ -389,32 +447,15 @@ object StreamReplay {
     * counts — exactly-one-survivor-per-key is the dedup contract, and it
     * must equal the batch `count(DISTINCT user_id)` per type. */
   def st06DedupReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st06-") { tmp =>
-      // cloned session, narrow stateful shuffle (same rationale as st02)
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
+    replay(s, "st06") { r =>
       val ev = Tables.events(s, d).select(col("user_id"), col("event_type"), col("ts"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val deduped = source
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .withWatermark("ts", "40 days")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-      val q = deduped.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      r.drainToParquet(r.orderedFeed(ev, nFiles = 4, perTrigger = 1)
+          .select(col("user_id"), col("event_type"), col("ts"))
+          .withWatermark("ts", "40 days")
+          .dropDuplicatesWithinWatermark("user_id", "event_type"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_keys"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   /** Feed bound for st07 — same rationale as [[FanoutFeedEnd]]: the row
@@ -437,37 +478,16 @@ object StreamReplay {
     * in-order feed means state holds only each user's open session, not
     * history — the same bound that holds on an unbounded stream. */
   def st07SessionReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st07-") { tmp =>
-      // cloned session, narrow stateful shuffle (same rationale as st03):
-      // merging-session state opens one store per shuffle partition per
-      // micro-batch — 8 partitions carry ~150 users comfortably.
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
+    replay(s, "st07") { r =>
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(SessionFeedEnd).cast("timestamp"))
         .select(col("user_id"), col("ts"))
-      val incoming = s"$tmp/incoming"
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
-      stageOrderedJson(ev, nFiles = 4, incoming, prefix = "a",
-        baseModTime = 1000000L)
-      val source = StreamingPipeline.jsonFileSource(
-        s2, incoming, feedSchema, maxFilesPerTrigger = 2,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val sess = StreamingPipeline.sessionized(
-        source, "ts", "user_id", gap = "30 minutes", lateness = "10 minutes")
-      val q = sess.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      r.drainToParquet(StreamingPipeline.sessionized(
+          r.orderedFeed(ev, nFiles = 4, perTrigger = 2),
+          "ts", "user_id", gap = "30 minutes", lateness = "10 minutes"))
         .select(col("session_start"), col("session_end"), col("user_id"),
           col("n_events"))
         .orderBy(col("user_id"), col("session_start"))
-        .localCheckpoint(eager = true)
     }
 
   /** Feed bound for st08 — same rationale as [[FanoutFeedEnd]]. */
@@ -477,6 +497,27 @@ object StreamReplay {
     * attribution window is a day, not minutes — 30 minutes would make the
     * row vacuous (zero pairs below sf0.1). */
   val JoinWindow = "1 day"
+
+  /** The purchase/click interval join of st08, st11 and st13: the first
+    * week's purchases and clicks staged as two ordered feeds of `nFiles`
+    * files each and drained one file per side per micro-batch, joined
+    * per user on a click within [[JoinWindow]] before the purchase. */
+  private def clickJoin(r: Replay, s: SparkSession, d: String, nFiles: Int,
+                        lateness: String, joinType: String = "inner"): DataFrame = {
+    val ev = Tables.events(s, d).filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
+    def side(eventType: String, dir: String, prefix: String, tsName: String) =
+      r.orderedFeed(ev.filter(col("event_type") === eventType).select(col("user_id"), col("ts")),
+          nFiles, perTrigger = 1, dir, prefix)
+        // drop the source's corrupt-record slot: the staged feed is clean
+        // by construction, and the join should carry (key, ts) only
+        .select(col("user_id"), col("ts").as(tsName))
+    StreamingPipeline.intervalJoin(
+      side("purchase", "purchases", "a", "p_ts"), side("click", "clicks", "b", "c_ts"),
+      key = "user_id", leftTs = "p_ts", rightTs = "c_ts",
+      window_ = JoinWindow, lateness = lateness, joinType = joinType)
+      // both sides carry `user_id`; positional rename disambiguates
+      .toDF("p_user", "p_ts", "c_user", "c_ts")
+  }
 
   /** st08: stream-stream interval-join replay (§2.3 J6's streaming form,
     * previously spec-only) — purchases and clicks staged as two ordered
@@ -493,46 +534,12 @@ object StreamReplay {
     * Scale: join state is per-key and time-bounded; matched pairs roll up
     * to per-hour counts — raw pair rows never leave the replay. */
   def st08JoinReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st08-") { tmp =>
-      // cloned session, narrow stateful shuffle (same rationale as st02)
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      val ev = Tables.events(s, d)
-        .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
-        .select(col("user_id"), col("event_type"), col("ts"))
-      stageOrderedJson(
-        ev.filter(col("event_type") === "purchase").select(col("user_id"), col("ts")),
-        nFiles = 2, s"$tmp/purchases", prefix = "a", baseModTime = 1000000L)
-      stageOrderedJson(
-        ev.filter(col("event_type") === "click").select(col("user_id"), col("ts")),
-        nFiles = 2, s"$tmp/clicks", prefix = "b", baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
-      def feed(dir: String, tsName: String) = StreamingPipeline.jsonFileSource(
-        s2, dir, feedSchema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-        // drop the source's corrupt-record slot: the staged feed is clean
-        // by construction, and the join should carry (key, ts) only
-        .select(col("user_id"), col("ts").as(tsName))
-      val joined = StreamingPipeline.intervalJoin(
-        feed(s"$tmp/purchases", "p_ts"), feed(s"$tmp/clicks", "c_ts"),
-        key = "user_id", leftTs = "p_ts", rightTs = "c_ts",
-        window_ = JoinWindow, lateness = "40 days")
-        // both sides carry `user_id`; positional rename disambiguates
-        .toDF("p_user", "p_ts", "c_user", "c_ts")
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+    replay(s, "st08") { r =>
+      r.drainToParquet(clickJoin(r, s, d, nFiles = 2, lateness = "40 days"))
         .groupBy(date_trunc("hour", col("p_ts")).as("hour_bucket"))
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("p_user")).as("n_users"))
         .orderBy(col("hour_bucket"))
-        .localCheckpoint(eager = true)
     }
 
   /** st09: metrics-listener replay (K4, previously spec-only) — a bounded
@@ -549,32 +556,19 @@ object StreamReplay {
     * Scale: the journal receives one small row per micro-batch, not per
     * record; the rollup reads only the journal. */
   def st09MetricsReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st09-") { tmp =>
+    replay(s, "st09") { r =>
       import graft.model.PipelineStatus
       import graft.state.{StateLog, StreamMetricsListener}
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(DlqFeedEnd).cast("timestamp"))
         .select(col("event_id"), col("ts"))
-      stageOrderedJson(ev, nFiles = 3, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val stateLog = new StateLog(s2, s"$tmp/state")
+      val source = r.orderedFeed(ev, nFiles = 3, perTrigger = 1)
+      val stateLog = new StateLog(r.s, s"${r.tmp}/state")
       val listener = new StreamMetricsListener(stateLog)
-      s2.streams.addListener(listener)
-      val qname = "graft_st09_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      r.s.streams.addListener(listener)
+      val qname = r.queryName()
       try {
-        val feedSchema = new StructType()
-          .add("event_id", "long").add("ts", "timestamp")
-        val source = StreamingPipeline.jsonFileSource(
-          s2, s"$tmp/incoming", feedSchema, maxFilesPerTrigger = 1,
-          options = Map("timestampFormat" -> JsonTsFormat))
-        val q = source.writeStream
-          .format("noop")
-          .queryName(qname)
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        r.drain(source.writeStream.format("noop").queryName(qname))
         // the TERMINATED event is delivered async on the listener bus —
         // block on the listener's own termination latch (counted down
         // AFTER the journal append runs, on the FIFO append thread, so
@@ -598,9 +592,8 @@ object StreamReplay {
             when(col("stage") === "stream_batch", col("r"))
               .otherwise(col("s")).as("total"))
           .orderBy(col("stage"))
-          .localCheckpoint(eager = true)
       } finally {
-        s2.streams.removeListener(listener)
+        r.s.streams.removeListener(listener)
       }
     }
 
@@ -622,36 +615,22 @@ object StreamReplay {
     * propagate on a real cluster) and the stream side never shuffles
     * before the sink. */
   def st10EnrichReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st10-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
+    replay(s, "st10") { r =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val dim = Tables.events(s2, d).select(col("event_type")).distinct()
+      val source = r.orderedFeed(ev, nFiles = 4, perTrigger = 1)
+      val dim = Tables.events(r.s, d).select(col("event_type")).distinct()
         .select(col("event_type"),
           upper(substring(col("event_type"), 1, 1)).as("category"),
           length(col("event_type")).cast("long").as("w"))
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val q = source.join(broadcast(dim), "event_type")
-        .select(col("category"),
-          round(col("value") * col("w") * 1000000).cast("long").as("scaled"))
-        .writeStream.format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      r.drainToParquet(source.join(broadcast(dim), "event_type")
+          .select(col("category"),
+            round(col("value") * col("w") * 1000000).cast("long").as("scaled")))
         .groupBy(col("category"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("scaled")) * lit(1.0) / lit(1000000.0), 6)
             .as("weighted_value"))
         .orderBy(col("category"))
-        .localCheckpoint(eager = true)
     }
 
   /** st11 horizon constants. The OUTER join's null emission is watermark-
@@ -681,52 +660,22 @@ object StreamReplay {
     * (window + lateness); null emission costs nothing extra (eviction
     * already walks the expiring state). */
   def st11OuterJoinReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st11-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      val ev = Tables.events(s, d)
-        .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
-        .select(col("user_id"), col("event_type"), col("ts"))
+    replay(s, "st11") { r =>
       // 4 files/side: max inter-source skew = feed span 7 d / 4 ≈ 1.75 d,
       // and lateness (3 d) ≥ window (1 d) + skew still holds with margin —
       // 8 micro-batches instead of 16 halves the replay's epoch overhead
-      stageOrderedJson(
-        ev.filter(col("event_type") === "purchase").select(col("user_id"), col("ts")),
-        nFiles = 4, s"$tmp/purchases", prefix = "a", baseModTime = 1000000L)
-      stageOrderedJson(
-        ev.filter(col("event_type") === "click").select(col("user_id"), col("ts")),
-        nFiles = 4, s"$tmp/clicks", prefix = "b", baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
-      def feed(dir: String, tsName: String) = StreamingPipeline.jsonFileSource(
-        s2, dir, feedSchema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-        .select(col("user_id"), col("ts").as(tsName))
-      val joined = StreamingPipeline.intervalJoin(
-        feed(s"$tmp/purchases", "p_ts"), feed(s"$tmp/clicks", "c_ts"),
-        key = "user_id", leftTs = "p_ts", rightTs = "c_ts",
-        window_ = JoinWindow, lateness = OuterLateness,
-        joinType = "left_outer")
-        .toDF("p_user", "p_ts", "c_user", "c_ts")
-        // matched rows always kept; null rows only below the cut (see
-        // OuterNullCut — the emission-boundary band is discarded in both
-        // engines so the kept set is an exact pure function of the feed)
-        .filter(col("c_user").isNotNull ||
-          col("p_ts") < lit(OuterNullCut).cast("timestamp"))
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+      r.drainToParquet(
+          clickJoin(r, s, d, nFiles = 4, lateness = OuterLateness, joinType = "left_outer")
+            // matched rows always kept; null rows only below the cut (see
+            // OuterNullCut — the emission-boundary band is discarded in both
+            // engines so the kept set is an exact pure function of the feed)
+            .filter(col("c_user").isNotNull ||
+              col("p_ts") < lit(OuterNullCut).cast("timestamp")))
         .groupBy(date_trunc("hour", col("p_ts")).as("hour_bucket"))
         .agg(count(col("c_ts")).as("n_pairs"),
           (count(lit(1)) - count(col("c_ts"))).as("n_null"),
           countDistinct(col("p_user")).as("n_users"))
         .orderBy(col("hour_bucket"))
-        .localCheckpoint(eager = true)
     }
 
   /** st12: incremental-summary replay — p27's partial-aggregate merge
@@ -746,57 +695,18 @@ object StreamReplay {
     * corpus (the p27 contract, now across real epochs). Sums ride
     * micro-scaled integers so the four-way reassociation is exact. */
   def st12SummaryReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st12-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
+    replay(s, "st12") { r =>
+      import graft.queries.PipelineQueries
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("ts"), col("value"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("event_type", "string").add("ts", "timestamp")
-        .add("value", "double")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", feedSchema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
       // the p27 summary/merge shapes, single-sourced (the two rows assert
       // the same maintenance contract)
-      def summarize(df: DataFrame): DataFrame =
-        graft.queries.PipelineQueries.summarizeCents(
-          df.select(col("event_type"), to_date(col("ts")).as("day"),
-            round(col("value") * 100).cast("long").as("cents")))
-      // The previous version is addressed by BATCH ID, not driver memory:
-      // epoch b always merges v(b-1) + batch b and overwrites v(b), so a
-      // retried or restart-replayed epoch reproduces exactly the same
-      // version it wrote the first time (a mutable last-written pointer
-      // would double-merge on a same-process retry and orphan history on
-      // a restart-from-checkpoint).
-      def versionPath(b: Long) = s"$tmp/summary/v$b"
-      def exists(p: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-      }
-      @volatile var maxBatch = -1L
-      val q = source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val partial = summarize(batch)
-          val prev = versionPath(batchId - 1)
-          val merged =
-            if (batchId > 0 && exists(prev))
-              graft.queries.PipelineQueries.mergeSummaries(
-                s2.read.parquet(prev), partial)
-            else partial
-          merged.write.mode("overwrite").parquet(versionPath(batchId))
-          maxBatch = math.max(maxBatch, batchId)
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (maxBatch < 0) throw new IllegalStateException("st12: no micro-batch ran")
-      s.read.parquet(versionPath(maxBatch))
+      r.drainVersioned(r.orderedFeed(ev, nFiles = 4, perTrigger = 1), "summary")(
+          batch => PipelineQueries.summarizeCents(
+            batch.select(col("event_type"), to_date(col("ts")).as("day"),
+              round(col("value") * 100).cast("long").as("cents"))),
+          PipelineQueries.mergeSummaries)
         .orderBy(col("event_type"), col("day"))
-        .localCheckpoint(eager = true)
     }
 
   /** st13: streaming AS-OF replay — a01's backward as-of with a04's
@@ -813,37 +723,8 @@ object StreamReplay {
     * must equal the batch as-of operator; gaps ride exact micro
     * integers so the rollup is engine-stable. */
   def st13AsofReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st13-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      val ev = Tables.events(s, d)
-        .filter(col("ts") < lit(JoinFeedEnd).cast("timestamp"))
-        .select(col("user_id"), col("event_type"), col("ts"))
-      stageOrderedJson(
-        ev.filter(col("event_type") === "purchase").select(col("user_id"), col("ts")),
-        nFiles = 2, s"$tmp/purchases", prefix = "a", baseModTime = 1000000L)
-      stageOrderedJson(
-        ev.filter(col("event_type") === "click").select(col("user_id"), col("ts")),
-        nFiles = 2, s"$tmp/clicks", prefix = "b", baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
-      def feed(dir: String, tsName: String) = StreamingPipeline.jsonFileSource(
-        s2, dir, feedSchema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-        .select(col("user_id"), col("ts").as(tsName))
-      val joined = StreamingPipeline.intervalJoin(
-        feed(s"$tmp/purchases", "p_ts"), feed(s"$tmp/clicks", "c_ts"),
-        key = "user_id", leftTs = "p_ts", rightTs = "c_ts",
-        window_ = JoinWindow, lateness = "40 days")
-        .toDF("p_user", "p_ts", "c_user", "c_ts")
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", s"$tmp/out")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$tmp/out")
+    replay(s, "st13") { r =>
+      r.drainToParquet(clickJoin(r, s, d, nFiles = 2, lateness = "40 days"))
         // the as-of reduction: latest candidate click per purchase
         .groupBy(col("p_user"), col("p_ts"))
         .agg(max(col("c_ts")).as("c_ts"))
@@ -852,7 +733,6 @@ object StreamReplay {
           sum(unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"),
           countDistinct(col("p_user")).as("n_users"))
         .orderBy(col("hour_bucket"))
-        .localCheckpoint(eager = true)
     }
 
   /** st14: streaming data-quality gate replay — the g18 expectation
@@ -869,47 +749,17 @@ object StreamReplay {
     * quality gate a production ingest runs ON the stream, not after
     * it. Per-epoch cost is O(|batch|) + a 1-row merge. */
   def st14QualityReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st14-") { tmp =>
+    replay(s, "st14") { r =>
       import graft.quality.Expectations
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       val checks = Expectations.st14Suite
       require(checks.forall(_.mergeable),
         "st14 maintains counters by addition - every check must be mergeable")
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("event_type"), col("value"), col("props"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("event_type", "string")
-        .add("value", "double").add("props", "string")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", feedSchema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      def versionPath(b: Long) = s"$tmp/counters/v$b"
-      def exists(p: String): Boolean = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(s.sparkContext.hadoopConfiguration).exists(hp)
-      }
-      @volatile var maxBatch = -1L
-      val q = source.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val partial = Expectations.counters(batch, checks)
-          val prev = versionPath(batchId - 1)
-          val merged =
-            if (batchId > 0 && exists(prev))
-              Expectations.mergeCounters(s2.read.parquet(prev), partial)
-            else partial
-          merged.write.mode("overwrite").parquet(versionPath(batchId))
-          maxBatch = math.max(maxBatch, batchId)
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      if (maxBatch < 0) throw new IllegalStateException("st14: no micro-batch ran")
-      Expectations.report(s.read.parquet(versionPath(maxBatch)), checks)
-        .localCheckpoint(eager = true)
+      Expectations.report(
+        r.drainVersioned(r.orderedFeed(ev, nFiles = 4, perTrigger = 1), "counters")(
+          Expectations.counters(_, checks), Expectations.mergeCounters),
+        checks)
     }
 
   /** Feed bound + byte budget for st15. One corpus day keeps the file
@@ -932,31 +782,17 @@ object StreamReplay {
     * the feed — so the row pins BOTH the row accounting (the roll
     * machinery lost/duplicated nothing) and the file-cut arithmetic. */
   def st15SizeFlushReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st15-") { tmp =>
-      // Round 15: the round-14 narrow-floor session pin is gone — the
-      // size-budget sink's writer exchange now carries an explicit
-      // partition count (Sinks.writePartitionedSizeBudget), so write
-      // parallelism no longer swings with the AQE coalescing floor and
-      // the per-query config patch is unnecessary.
-      val s2 = Session.isolated(s)
-      val ev = Tables.events(s2, d)
+    replay(s, "st15", narrow = false) { r =>
+      val ev = Tables.events(r.s, d)
         .filter(col("ts") < lit(SizeFlushFeedEnd).cast("timestamp"))
       // one staged file → exactly one AvailableNow epoch at ANY SF: rolls
       // are per-delivery-epoch (Firehose buffer semantics), so the oracle's
       // whole-feed roll arithmetic requires the drain not to split
-      ev.coalesce(1).write.mode("overwrite")
-        .option("timestampFormat", JsonTsFormat)
-        .json(s"$tmp/incoming")
-      val layout = PipelineLayout(s"$tmp/lake")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1000,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val stream = StreamingPipeline.processingStream(
-        source, Seq(Rule("always_true", lit(true))))
-      val query = StreamingPipeline.sizeBudgetSink(stream, layout,
+      r.stage(ev.coalesce(1))
+      val layout = PipelineLayout(s"${r.tmp}/lake")
+      StreamingPipeline.sizeBudgetSink(acceptAll(r.source(ev.schema, perTrigger = 1000)), layout,
         sizeOf = Sinks.eventWireSize, orderCols = Seq("ts", "event_id"),
-        byteBudget = SizeFlushBudget, availableNow = true).start()
-      query.awaitTermination()
+        byteBudget = SizeFlushBudget, availableNow = true).start().awaitTermination()
       s.read.parquet(layout.processed)
         // project the file name BEFORE the aggregate (non-deterministic
         // expressions can't sit inside an aggregate function's arguments)
@@ -965,7 +801,6 @@ object StreamReplay {
         .agg(count(lit(1)).as("n_rows"),
              countDistinct(col("_file")).as("n_files"))
         .orderBy(col("year"), col("month"), col("day"), col("hour"))
-        .localCheckpoint(eager = true)
     }
 
   /** st16 shard count: the stream maintains one bounded reservoir per
@@ -990,69 +825,51 @@ object StreamReplay {
     * Scale: per-batch state work is O(batch + k log k) per shard; the
     * final merge ranks shards·k candidates — constants, not corpus. */
   def st16ReservoirReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st16-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      import s2.implicits._
+    replay(s, "st16") { r =>
+      import r.s.implicits._
       import org.apache.spark.sql.streaming.GroupStateTimeout
       import graft.queries.PipelineQueries
-      val qname = "graft_st16_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        val docs = Tables.documents(s2, d)
-          .filter(col("n_chars") > 0)
-          .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
-        docs.repartitionByRange(4, col("doc_id"))
-          .write.mode("overwrite").json(s"$tmp/incoming")
-        val source = StreamingPipeline.jsonFileSource(
-          s2, s"$tmp/incoming", docs.schema, maxFilesPerTrigger = 1)
-        val keyed = source
-          .withColumn("u48",
-            conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
-              .cast("long"))
-          .withColumn("lnkey", expr(PipelineQueries.ResKeySql))
-          .withColumn("shard",
-            pmod(col("doc_id"), lit(ReservoirShards.toLong)).cast("int"))
-          .select(col("shard"), col("doc_id"), col("n_chars"), col("lnkey"))
-          .as[(Int, Long, Long, Double)]
-        val res = keyed.groupByKey(_._1)
-          .flatMapGroupsWithState[List[(Double, Long, Long)], (Int, Double, Long, Long)](
-            OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-            case (shard, rows, state) =>
-              val cur = state.getOption.getOrElse(Nil)
-              val merged = (cur ++ rows.map(r => (r._4, r._2, r._3)))
-                .sortBy { case (k, id, _) => (-k, id) }
-                .take(PipelineQueries.ReservoirK)
-              state.update(merged)
-              // emit only rows ADMITTED this batch (ADVICE r9): a
-              // global-top-k row is admitted on arrival and never
-              // evicted, so admissions alone carry the final sample —
-              // sink growth is O(admissions), not O(batches·shards·k)
-              val prev = cur.toSet
-              merged.iterator.filter(r => !prev.contains(r))
-                .map { case (k, id, w) => (shard, k, id, w) }
-          }
-          .toDF("shard", "lnkey", "doc_id", "n_chars")
-        val query = res.writeStream
-          .format("memory")
-          .queryName(qname)
-          .outputMode("update")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.orderBy(col("lnkey").desc, col("doc_id"))
-        s2.table(qname)
-          .select(col("doc_id"), col("n_chars"), col("lnkey"))
-          .distinct()
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= PipelineQueries.ReservoirK)
-          .select(col("rank"), col("doc_id"), col("n_chars"),
-            expr("CAST(round(lnkey * 1000000000) AS BIGINT)").as("key_nanos"))
-          .orderBy(col("rank"))
-          .localCheckpoint(eager = true)
-      } finally {
-        try { s2.catalog.dropTempView(qname); () } catch { case _: Throwable => () }
-      }
+      val docs = Tables.documents(r.s, d)
+        .filter(col("n_chars") > 0)
+        .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
+      r.stage(docs.repartitionByRange(4, col("doc_id")))
+      val keyed = r.source(docs.schema, perTrigger = 1)
+        .withColumn("u48",
+          conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
+            .cast("long"))
+        .withColumn("lnkey", expr(PipelineQueries.ResKeySql))
+        .withColumn("shard",
+          pmod(col("doc_id"), lit(ReservoirShards.toLong)).cast("int"))
+        .select(col("shard"), col("doc_id"), col("n_chars"), col("lnkey"))
+        .as[(Int, Long, Long, Double)]
+      val res = keyed.groupByKey(_._1)
+        .flatMapGroupsWithState[List[(Double, Long, Long)], (Int, Double, Long, Long)](
+          OutputMode.Update(), GroupStateTimeout.NoTimeout) {
+          case (shard, rows, state) =>
+            val cur = state.getOption.getOrElse(Nil)
+            val merged = (cur ++ rows.map(x => (x._4, x._2, x._3)))
+              .sortBy { case (k, id, _) => (-k, id) }
+              .take(PipelineQueries.ReservoirK)
+            state.update(merged)
+            // emit only rows ADMITTED this batch (ADVICE r9): a
+            // global-top-k row is admitted on arrival and never
+            // evicted, so admissions alone carry the final sample —
+            // sink growth is O(admissions), not O(batches·shards·k)
+            val prev = cur.toSet
+            merged.iterator.filter(x => !prev.contains(x))
+              .map { case (k, id, w) => (shard, k, id, w) }
+        }
+        .toDF("shard", "lnkey", "doc_id", "n_chars")
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.orderBy(col("lnkey").desc, col("doc_id"))
+      r.drainToMemory(res)
+        .select(col("doc_id"), col("n_chars"), col("lnkey"))
+        .distinct()
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= PipelineQueries.ReservoirK)
+        .select(col("rank"), col("doc_id"), col("n_chars"),
+          expr("CAST(round(lnkey * 1000000000) AS BIGINT)").as("key_nanos"))
+        .orderBy(col("rank"))
     }
 
   /** st17 retention horizon — the reference's 1-day realtime state
@@ -1092,6 +909,21 @@ object StreamReplay {
     * replays the eviction rather than resurrecting the key. Sizing a
     * production store, budget for live keys + not-yet-compacted
     * tombstones, not live keys alone. */
+  def st17TtlReplay(s: SparkSession, d: String): DataFrame =
+    replay(s, "st17", rocksDb = true) { r =>
+      import r.s.implicits._
+      val ev = Tables.events(r.s, d).select(col("user_id"), col("ts"))
+      val typed = r.orderedFeed(ev, nFiles = 6, perTrigger = 2)
+        .withWatermark("ts", "0 seconds")
+        .select(col("user_id"), col("ts"))
+        .as[(Long, java.sql.Timestamp)]
+      r.drainToState(StreamingPipeline.ttlSessionTrack(typed, TtlRetentionMs), "retained")
+        .select(col("key.value").as("user_id"),
+          col("value.n").as("n_events"),
+          col("value.lastTs").as("last_ts"))
+        .orderBy(col("user_id"))
+    }
+
   /** st18: in-stream near-dup ADMISSION replay — d12's ingest gate run
     * where it lives in production: inside the stream. The history side
     * (even ids) is a maintained LSH index (shingle sets + banded-MinHash
@@ -1113,80 +945,31 @@ object StreamReplay {
     * come from (band, bh) collisions only. State store: none — the
     * admission state lives in the index, not the stream. */
   def st18NearDupReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st18-") { tmp =>
+    replay(s, "st18") { r =>
       import graft.dedup.Dedup
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
       def shingled(df: DataFrame): DataFrame = df
         .select(col("doc_id"),
           graft.functions.ShingleFunctions.shingles3(col("text")).as("sh"))
-      val hist = shingled(Tables.documents(s2, d)
-        .filter(col("doc_id") % 2 === 0)).persist()
-      val histBk = Dedup.minhashBuckets(hist).persist()
+      val hist = r.pin(shingled(Tables.documents(r.s, d)
+        .filter(col("doc_id") % 2 === 0)))
+      val histBk = r.pin(Dedup.minhashBuckets(hist))
       hist.count(); histBk.count()
-      val feed = Tables.documents(s2, d).filter(col("doc_id") % 2 === 1)
+      val feed = Tables.documents(r.s, d).filter(col("doc_id") % 2 === 1)
         .select(col("doc_id"), col("text"),
           timestamp_seconds(col("doc_id")).as("ts"))
-      stageOrderedJson(feed, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
+      val source = r.orderedFeed(feed, nFiles = 4, perTrigger = 1)
+      val out = s"${r.tmp}/out"
       // pre-create the sink with the gate's schema so an all-clean batch
       // series still leaves a readable (empty) table
       Dedup.nearDupGate(hist.limit(0), histBk.limit(0), hist, histBk)
-        .write.mode("overwrite").parquet(s"$tmp/out")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", feed.schema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val q = source.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val bSh = shingled(batch)
-          Dedup.nearDupGate(bSh, Dedup.minhashBuckets(bSh), hist, histBk)
-            .write.mode("append").parquet(s"$tmp/out")
-          ()
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = s.read.parquet(s"$tmp/out")
-        .orderBy(col("doc_id"))
-        .localCheckpoint(eager = true)
-      hist.unpersist(); histBk.unpersist()
-      out
-    }
-
-  def st17TtlReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st17-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s2.implicits._
-      val ev = Tables.events(s2, d).select(col("user_id"), col("ts"))
-      val incoming = s"$tmp/incoming"
-      stageOrderedJson(ev, nFiles = 6, incoming, prefix = "a",
-        baseModTime = 1000000L)
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
-      val source = StreamingPipeline.jsonFileSource(
-        s2, incoming, feedSchema, maxFilesPerTrigger = 2,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val typed = source
-        .withWatermark("ts", "0 seconds")
-        .select(col("user_id"), col("ts"))
-        .as[(Long, java.sql.Timestamp)]
-      val query = StreamingPipeline.ttlSessionTrack(typed, TtlRetentionMs)
-        .writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      s2.read.format("statestore")
-        .option("stateVarName", "retained")
-        .load(s"$tmp/ckpt")
-        .select(col("key.value").as("user_id"),
-          col("value.n").as("n_events"),
-          col("value.lastTs").as("last_ts"))
-        .orderBy(col("user_id"))
-        .localCheckpoint(eager = true)
+        .write.mode("overwrite").parquet(out)
+      r.drain(source.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        val bSh = shingled(batch)
+        Dedup.nearDupGate(bSh, Dedup.minhashBuckets(bSh), hist, histBk)
+          .write.mode("append").parquet(out)
+        ()
+      })
+      s.read.parquet(out).orderBy(col("doc_id"))
     }
 
   /** st19: running-DISTINCT replay — q47's per-user distinct-coverage
@@ -1203,43 +986,23 @@ object StreamReplay {
     * type domain, not the stream — see [[StreamingPipeline.DistinctState]]);
     * the memory sink sees one row per (key, batch), never per event. */
   def st19DistinctReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st19-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      import s2.implicits._
-      val qname = "graft_st19_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        val ev = Tables.events(s2, d)
-          .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
-        stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-          baseModTime = 1000000L)
-        val source = StreamingPipeline.jsonFileSource(
-          s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1,
-          options = Map("timestampFormat" -> JsonTsFormat))
-        val typed = source
-          .select(col("user_id"), col("event_type"), col("event_id"),
-            unix_micros(col("ts")).as("tus"))
-          .as[(Long, String, Long, Long)]
-        val query = StreamingPipeline.trackDistinct(typed).writeStream
-          .format("memory")
-          .queryName(qname)
-          .outputMode("update")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("_1")).orderBy(col("_2").desc)
-        s2.table(qname)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("_1").as("user_id"), col("_2").as("n_events"),
-            col("_3").as("n_types"), col("_4").as("cover_rn"),
-            col("_5").as("cover_tus"), col("_3").as("max_d_sofar"))
-          .orderBy(col("user_id"))
-          .localCheckpoint(eager = true)
-      } finally {
-        try { s2.catalog.dropTempView(qname); () } catch { case _: Throwable => () }
-      }
+    replay(s, "st19") { r =>
+      import r.s.implicits._
+      val ev = Tables.events(r.s, d)
+        .select(col("user_id"), col("event_type"), col("event_id"), col("ts"))
+      val typed = r.orderedFeed(ev, nFiles = 4, perTrigger = 1)
+        .select(col("user_id"), col("event_type"), col("event_id"),
+          unix_micros(col("ts")).as("tus"))
+        .as[(Long, String, Long, Long)]
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("_1")).orderBy(col("_2").desc)
+      r.drainToMemory(StreamingPipeline.trackDistinct(typed))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("_1").as("user_id"), col("_2").as("n_events"),
+          col("_3").as("n_types"), col("_4").as("cover_rn"),
+          col("_5").as("cover_tus"), col("_3").as("max_d_sofar"))
+        .orderBy(col("user_id"))
     }
 
   /** st20's skew construction: 3 of 4 USERS collapse onto one hot key,
@@ -1263,6 +1026,12 @@ object StreamReplay {
       col("event_id"),
       expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
 
+  /** st20/st21's feed: the events staged as 4 ordered files, drained one
+    * file per micro-batch, with [[saltKeyed]]'s skewed key. */
+  private def saltedFeed(r: Replay, d: String): DataFrame = saltKeyed(r.orderedFeed(
+    Tables.events(r.s, d).select(col("event_id"), col("user_id"), col("value"), col("ts")),
+    nFiles = 4, perTrigger = 1))
+
   /** st20: SKEWED stateful aggregation through two-phase salting inside
     * foreachBatch — the streaming-side answer to q45's batch skew join.
     * AQE (and so its skew mitigation) is DISABLED in stateful streaming,
@@ -1280,35 +1049,22 @@ object StreamReplay {
     * to deploy, not just fast. Per-task spread under the salt is
     * asserted in RoundTwelveOpsSpec (no SQL form). */
   def st20SaltedReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st20-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      val ev = Tables.events(s2, d)
-        .select(col("event_id"), col("user_id"), col("value"), col("ts"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val keyed = saltKeyed(source)
-      val query = keyed.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.transform.SaltedAggregate(batch.toDF(), "zkey", SaltBuckets,
+    replay(s, "st20") { r =>
+      val partials = s"${r.tmp}/partials"
+      r.drain(saltedFeed(r, d).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          graft.transform.SaltedAggregate(batch, "zkey", SaltBuckets,
             partials = Seq(count(lit(1)).as("n"), sum(col("cents")).as("sc"),
               min(col("event_id")).as("mn"), max(col("event_id")).as("mx")),
             merges = Seq(sum(col("n")).as("n"), sum(col("sc")).as("sc"),
               min(col("mn")).as("mn"), max(col("mx")).as("mx")))
-            .write.mode("append").parquet(s"$tmp/partials")
-        }
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      s2.read.parquet(s"$tmp/partials")
+            .write.mode("append").parquet(partials)
+        })
+      r.s.read.parquet(partials)
         .groupBy(col("zkey"))
         .agg(sum(col("n")).as("n_events"), sum(col("sc")).as("sum_cents"),
           min(col("mn")).as("min_event_id"), max(col("mx")).as("max_event_id"))
         .orderBy(col("zkey"))
-        .localCheckpoint(eager = true)
     }
 
   /** st21: st20's stateful-API twin — the salt lives IN the state store
@@ -1331,33 +1087,14 @@ object StreamReplay {
     * EXACTLY the batch rollup — st20's oracle, reused verbatim. Spread
     * across slots is asserted in RoundThirteenOpsSpec (no SQL form). */
   def st21SaltedStateReplay(s: SparkSession, d: String): DataFrame =
-    withReplayTmp(s, "graft-st21-") { tmp =>
-      val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s2.implicits._
-      val ev = Tables.events(s2, d)
-        .select(col("event_id"), col("user_id"), col("value"), col("ts"))
-      stageOrderedJson(ev, nFiles = 4, s"$tmp/incoming", prefix = "a",
-        baseModTime = 1000000L)
-      val source = StreamingPipeline.jsonFileSource(
-        s2, s"$tmp/incoming", ev.schema, maxFilesPerTrigger = 1,
-        options = Map("timestampFormat" -> JsonTsFormat))
-      val typed = saltKeyed(source)
+    replay(s, "st21", rocksDb = true) { r =>
+      import r.s.implicits._
+      val typed = saltedFeed(r, d)
         .select(col("zkey"),
           pmod(xxhash64(col("event_id")), lit(SaltBuckets.toLong)).as("salt"),
           col("event_id"), col("cents"))
         .as[(Long, Long, Long, Long)]
-      val query = StreamingPipeline.saltedStateTrack(typed)
-        .writeStream.format("noop")
-        .outputMode("update")
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-      s2.read.format("statestore")
-        .option("stateVarName", "partial")
-        .load(s"$tmp/ckpt")
+      r.drainToState(StreamingPipeline.saltedStateTrack(typed), "partial")
         .select(col("key._1").as("zkey"),
           col("value.n").as("n"), col("value.sc").as("sc"),
           col("value.mn").as("mn"), col("value.mx").as("mx"))
@@ -1365,7 +1102,6 @@ object StreamReplay {
         .agg(sum(col("n")).as("n_events"), sum(col("sc")).as("sum_cents"),
           min(col("mn")).as("min_event_id"), max(col("mx")).as("max_event_id"))
         .orderBy(col("zkey"))
-        .localCheckpoint(eager = true)
     }
 
   val queries: Map[String, Q] = Map(

@@ -36,6 +36,14 @@ class ProbeSpec extends SparkSpec {
     assert(lines.last.contains("isFinalPlan=true"))
   }
 
+  test("plan: wide field lists print whole, not cut at maxToStringFields") {
+    // s16's JL projection runs an intermediate execution wider than
+    // Spark's default 25 printed fields
+    val lines = Probe.run(spark, "plan", sf, Seq("s16_jl_project"))
+    assert(lines.exists(_.startsWith("== s16_jl_project INTERMEDIATE EXECUTION")))
+    assert(!lines.exists(_.contains("more fields")), "a plan was cut at maxToStringFields")
+  }
+
   test("recall: the PQ grid and the hard-regime IVF sweep, as fractions") {
     val lines = Probe.run(spark, "recall", sf, Nil)
     val row = """(RECALL|HARD-IVF) .*worst=([0-9.]+) mean=([0-9.]+).*""".r

@@ -571,51 +571,30 @@ class StreamingSpec extends SparkSpec {
     // the eviction timer's ceil-to-next-millisecond rounding, which by
     // design never evicts EARLIER than the oracle's inclusive boundary.
     val retention = graft.streaming.StreamReplay.TtlRetentionMs
-    val tmp = Files.createTempDirectory("graft-st17-multi-").toString
-    try {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s2.implicits._
+    graft.streaming.StreamReplay.replay(spark, "st17-multi", rocksDb = true) { r =>
+      import r.s.implicits._
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("ts"), col("user_id"))
-      val ranked = Tables.events(s2, sf).select(col("user_id"), col("ts"))
+      val ranked = Tables.events(r.s, sf).select(col("user_id"), col("ts"))
         .withColumn("rn", row_number().over(w))
         .localCheckpoint(eager = true)
       val n = ranked.count()
       val stages = 3
-      val incoming = s"$tmp/incoming"
-      val feedSchema = new StructType()
-        .add("user_id", "long").add("ts", "timestamp")
       var evictedSomewhere = false
       (1 to stages).foreach { k =>
         val hi = k * n / stages
         val lo = (k - 1) * n / stages
-        graft.streaming.StreamReplay.stageOrderedJson(
+        val source = r.orderedFeed(
           ranked.filter(col("rn") > lo && col("rn") <= hi)
             .select(col("user_id"), col("ts")),
-          nFiles = 4, incoming, prefix = f"s$k",
+          nFiles = 4, perTrigger = 2, prefix = f"s$k",
           baseModTime = 1000000L + k * 100000L)
-        val source = StreamingPipeline.jsonFileSource(
-          s2, incoming, feedSchema, maxFilesPerTrigger = 2,
-          options = Map("timestampFormat" ->
-            graft.streaming.StreamReplay.JsonTsFormat))
         val typed = source
           .withWatermark("ts", "0 seconds")
           .select(col("user_id"), col("ts"))
           .as[(Long, Timestamp)]
-        val q = StreamingPipeline.ttlSessionTrack(typed, retention)
-          .writeStream.format("noop")
-          .outputMode("update")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val stateRows = s2.read.format("statestore")
-          .option("stateVarName", "retained")
-          .load(s"$tmp/ckpt").count()
+        val stateRows = r.drainToState(
+          StreamingPipeline.ttlSessionTrack(typed, retention), "retained").count()
         val pfx = ranked.filter(col("rn") <= hi)
         val maxUs = pfx
           .agg(max((col("ts").cast("decimal(26,6)") * 1000000).cast("long")))
@@ -631,8 +610,7 @@ class StreamingSpec extends SparkSpec {
         if (stateRows < seenKeys) evictedSomewhere = true
       }
       assert(evictedSomewhere, "bound never bit: no key evicted at any horizon")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp)); ()
+      r.s.emptyDataFrame
     }
   }
 }
