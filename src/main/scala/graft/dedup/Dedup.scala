@@ -83,6 +83,62 @@ object Dedup {
   private def docShingles(s: SparkSession, d: String): DataFrame =
     docShinglesOf(Tables.documents(s, d))
 
+  /** The exact-Jaccard family's shingle index over a (doc_id, sh) frame:
+    * one (doc_id, n, h) row per posting. Shingles are hashed to 64-bit
+    * keys at once, so no index exchange carries strings, and n, the doc's
+    * shingle-set size, rides every posting (explode emits size(sh) rows
+    * per doc), so no doc_id-keyed size aggregate or size join is needed.
+    * Lazy: d02 and d20 checkpoint it eagerly where they read it more than
+    * once. */
+  private def shingleIndex(ds: DataFrame): DataFrame =
+    ds.select(col("doc_id"), size(col("sh")).cast("long").as("n"),
+        explode(col("sh")).as("sg"))
+      .select(col("doc_id"), col("n"), xxhash64(col("sg")).as("h"))
+
+  /** The dedup family's candidate-pair self-join: the rows of `frame`
+    * that agree on every key, once per unordered pair
+    * (a.doc_id < b.doc_id), with `gates` ANDed into the join condition
+    * and each side's columns under the alias `a` or `b`. Every candidate
+    * generator of d02, d04 (and its planted witness set), d15, d20/d21
+    * and d22 is this join.
+    *
+    * Plan: one `repartition(keys)` exchange that both sides read (the
+    * second as a ReusedExchange), joined shuffled-hash rather than
+    * sort-merge: r14's JFR profile put SMJ's buffered-side
+    * `UnsafeRow.copy` (every key group copied into an
+    * ExternalAppendOnlyUnsafeRowArray before the cross product) at the
+    * top of d20's cpu, and SHJ streams the probe side with no per-group
+    * copy. The hint also keeps AQE from flipping to a broadcast, which
+    * would clone the build side.
+    *
+    * NOT scale-safe as it stands: the exchange is REPARTITION_BY_COL,
+    * which AQE neither size-bounds nor skew-splits (skew-join splitting
+    * applies only to ENSURE_REQUIREMENTS shuffles), and the SHJ build
+    * side is an in-memory hash map that does not spill, so one hot key
+    * partition that SMJ would have spilled can exhaust executor memory.
+    * This function is where the bounded candidate-pair operator of
+    * ROADMAP item 3 replaces it. */
+  private def selfPairs(frame: DataFrame, keys: Seq[String], gates: Column*): DataFrame = {
+    val part = frame.repartition(keys.map(col): _*)
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")) ++
+      Seq(col("a.doc_id") < col("b.doc_id")) ++ gates
+    part.as("a").join(part.as("b").hint("shuffle_hash"), on.reduce(_ && _))
+  }
+
+  /** Candidate pairs of a (doc_id, n, h) index with their common posting
+    * count `c`; both set sizes ride the grouping key as na and nb. */
+  private def pairCounts(postings: DataFrame, c: String): DataFrame =
+    selfPairs(postings, Seq("h"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
+      .agg(count(lit(1)).as(c))
+
+  /** The hashes of an index whose document frequency exceeds [[DfCap]]:
+    * one map-side-combinable aggregate over the postings. */
+  private def overCapHashes(inv: DataFrame): DataFrame =
+    inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > DfCap).select(col("h"))
+
   /** d02: n-gram Jaccard near-dup — exact Jaccard ≥ 0.6 through the
     * df-capped candidate discipline d22 proved on the hostile corpus
     * (VERDICT r13 item 4: d02 was the last corpus-shaped unbounded plan
@@ -97,9 +153,10 @@ object Dedup {
     * uncapped cpu on d02/d07/d09/g10 for zero benefit when no posting
     * crosses the cap.
     *
-    * EXACTNESS (the split-count form — algebraically d22's full-set
-    * verify, cheaper when the over-cap side is empty): the true common
-    * count decomposes as c = c_subcap + c_overcap. c_subcap falls out of
+    * EXACTNESS (the split-count form; d22 is this same split-count run
+    * over the hostile slice, where the over-cap side is never empty): the
+    * true common count decomposes as c = c_subcap + c_overcap. c_subcap
+    * falls out of
     * the candidate self-join itself (the old d02 counting form,
     * restricted to sub-cap postings); c_overcap adds the over-cap
     * postings back per candidate pair as the intersection of the two
@@ -112,34 +169,22 @@ object Dedup {
     * by RoundFourteenOpsSpec against [[d02UncappedCensus]], the old
     * plan kept as the spec's measurement foil.
     *
-    * Plan shape: shingles are hashed to 64-bit keys immediately (the
-    * inverted index never shuffles strings) and eagerly materialized
-    * ONCE (the d20 localCheckpoint discipline) as (doc_id, n, h) rows,
-    * n = the doc's shingle-set size — the df aggregate and both
+    * Plan shape: the [[shingleIndex]] is eagerly materialized ONCE (the
+    * d20 localCheckpoint discipline) — the df aggregate and both
     * split-count sides read that frame, and n rides the self-join's
-    * grouping key into the Jaccard denominator, so no doc_id-keyed size
-    * aggregate or size join exists. Each index is built once per call:
-    * the over-cap hash set (one `groupBy(h)` count, checkpointed, its
-    * row count observed on that same job) is both the probe and the
-    * split, whose sides are a `left_anti` and a `left_semi` join against
-    * it (no df window recomputed per consumer). The shuffle_hash hint
-    * keeps AQE from flipping the self-join to broadcast, which would
-    * clone the build side. */
+    * grouping key into the Jaccard denominator. Each index is built once
+    * per call: the over-cap hash set (checkpointed, its row count
+    * observed on that same job) is both the probe and the split, whose
+    * sides are a `left_anti` and a `left_semi` join against it (no df
+    * window recomputed per consumer). The candidates are [[selfPairs]]. */
   def d02NgramJaccard(s: SparkSession, d: String): DataFrame =
     d02Over(Tables.documents(s, d))
 
   /** d02's discipline over an arbitrary documents frame — factored so
-    * the spec drives the SAME code on the hostile corpus (exercising the
-    * split-count branch d22 measured) while the natural corpus takes the
-    * fast path. */
+    * d22 runs the SAME code on the hostile corpus (the split-count
+    * branch) while the natural corpus takes the fast path. */
   private[graft] def d02Over(docs: DataFrame): DataFrame = {
-    // n = size(sh) rides the index: explode emits size(sh) rows per doc,
-    // so n is the doc's posting count without a doc_id-keyed aggregate
-    val inv = docShinglesOf(docs)
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
-        explode(col("sh")).as("sg"))
-      .select(col("doc_id"), col("n"), xxhash64(col("sg")).as("h"))
-      .localCheckpoint(true)
+    val inv = shingleIndex(docShinglesOf(docs)).localCheckpoint(true)
     // The over-cap split, computed ONCE: the hashes whose df exceeds the
     // cap, from one map-side-combinable aggregate over the index, eagerly
     // materialized. Its size, observed on that same job, is the probe (an
@@ -149,26 +194,12 @@ object Dedup {
     // them at ~3x the uncapped cpu on d02/d07/d09/g10), so the plan falls
     // back to the uncapped shape off the SAME checkpointed index, which
     // the cap provably equals then.
-    val (overH, overCount) = Observed(
-        inv.groupBy(col("h")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > DfCap).select(col("h")),
-        count(lit(1)))(_.localCheckpoint(true))
-    // candidate pairs with their common count, both set sizes carried
-    // through the grouping key; shuffled-hash, not sort-merge (round 15,
-    // guide §3.1): same buffered-copy elimination as d20's candidate join,
-    // and the hint pins the build side against an AQE broadcast flip
-    def pairCounts(postings: DataFrame, c: String): DataFrame = {
-      val sub = postings.repartition(col("h"))
-      sub.as("a").join(sub.as("b").hint("shuffle_hash"),
-          col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-          col("a.n").as("na"), col("b.n").as("nb"))
-        .agg(count(lit(1)).as(c))
-    }
+    val (overH, overCount) =
+      Observed(overCapHashes(inv), count(lit(1)))(_.localCheckpoint(true))
     val common =
       if (overCount.exists(_.getLong(0) == 0L)) pairCounts(inv, "c")
       else {
-        // the split-count form — algebraically d22's full-set verify:
+        // the split-count form (d22 is this branch on the hostile slice):
         // c = c_subcap (from the capped candidate self-join itself)
         //   + c_overcap (the over-cap hashes the pair shares). Each doc's
         //     over-cap hashes are one array on a doc_id-partitioned
@@ -253,9 +284,8 @@ object Dedup {
     * shuffle-hash joins, never a pair-list broadcast (d16's rule).
     *
     * Plan: one exchange on `h` builds the rarity-ranked index (df join),
-    * one on doc_id ranks prefixes, the prefix frame funnels through one
-    * `repartition(h)` both self-join sides reuse (d02's ReusedExchange
-    * pattern), and the verify is id-keyed. */
+    * one on doc_id ranks prefixes, the prefix frame is the [[selfPairs]]
+    * candidate join, and the verify is id-keyed. */
   def d20PrefixJoin(s: SparkSession, d: String): DataFrame =
     prefixJoinOver(docShingles(s, d))
 
@@ -271,49 +301,13 @@ object Dedup {
     // text or the shingle arrays. The join-based df census could never
     // share the explode (column pruning makes its exchange
     // non-canonical → no ReusedExchange; measured 63 cpu-s vs d02's 14).
-    val inv = ds
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
-        explode(col("sh")).as("sg"))
-      .select(col("doc_id"), col("n"), xxhash64(col("sg")).as("h"))
-      .localCheckpoint(true)
-    val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
-    val prefix = inv
-      .withColumn("df", count(lit(1)).over(wDf))
-      .withColumn("pos", row_number().over(wDoc))
-      .filter(col("pos") <= col("n") - ceil(col("n") * PrefixTau) + 1)
-      .select(col("doc_id"), col("h"), col("n"))
-      .repartition(col("h"))
-    // Round 15 (guide §3.1): the candidate self-join is a shuffled-HASH
-    // join, not sort-merge — r14's JFR profile put SMJ's buffered-side
-    // UnsafeRow.copy at leaf #1 of the row's 37 cpu-s (every key group
-    // is copied into the ExternalAppendOnlyUnsafeRowArray before the
-    // within-key cross product). SHJ builds one hash map per partition
-    // and streams the probe side with zero per-group copies; both sides
-    // still funnel through the ONE repartition(h) exchange below
-    // (ReusedExchange, PlanSpec-pinned), and the explicit hint keeps AQE
-    // from flipping to broadcast (which would clone the build side) the
-    // same way the old merge hint did. NOT scale-safe as it stands: the
-    // repartition(h) exchange is REPARTITION_BY_COL, which AQE neither
-    // size-bounds nor skew-splits (skew-join splitting applies only to
-    // ENSURE_REQUIREMENTS shuffles), and the SHJ build side is an
-    // in-memory hash map that does not spill, so one hot hash partition
-    // that SMJ would have spilled can exhaust executor memory. The
-    // bounded replacement is ROADMAP item 3's candidate-pair operator.
-    val cand = prefix.as("a").join(prefix.as("b").hint("shuffle_hash"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")) >=
-            ceil(greatest(col("a.n"), col("b.n")) * PrefixTau))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .distinct()
+    val inv = shingleIndex(ds).localCheckpoint(true)
     // exact verify WITHOUT materializing shingle sets: count common
     // hashes per candidate pair (d02's counting form restricted to
     // candidates) — two partitioned joins on ids/hashes, so neither the
     // pair list (grows with dup structure) nor the index (grows with
     // the corpus) is ever a broadcast build side
-    cand
+    prefixCandidates(inv)
       .join(inv.select(col("doc_id").as("doc_a"), col("h")).hint("shuffle_hash"), "doc_a")
       .join(inv.select(col("doc_id").as("doc_b"), col("h")).hint("shuffle_hash"),
         Seq("doc_b", "h"))
@@ -326,17 +320,11 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** d20's candidate pair list before verification — exposed for the
-    * spec's completeness/efficiency laws (output census ⊆ candidates;
-    * candidates strictly fewer than the full inverted-index meets). */
-  private[graft] def d20Candidates(s: SparkSession, d: String): DataFrame =
-    candidatesOver(docShingles(s, d))
-
-  private[graft] def candidatesOver(ds: DataFrame): DataFrame = {
-    val inv = ds
-      .select(col("doc_id"), size(col("sh")).cast("long").as("n"),
-        explode(col("sh")).as("sg"))
-      .select(col("doc_id"), col("n"), xxhash64(col("sg")).as("h"))
+  /** d20's candidates over a (doc_id, n, h) index: each doc's
+    * `n − ⌈τn⌉ + 1` rarest postings (df asc, hash asc) self-joined on
+    * the hash, behind the size gate `min ≥ ⌈τ·max⌉`; distinct
+    * (doc_a, doc_b, na, nb). */
+  private def prefixCandidates(inv: DataFrame): DataFrame = {
     val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
@@ -345,13 +333,18 @@ object Dedup {
       .withColumn("pos", row_number().over(wDoc))
       .filter(col("pos") <= col("n") - ceil(col("n") * PrefixTau) + 1)
       .select(col("doc_id"), col("h"), col("n"))
-    prefix.as("a").join(prefix.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")) >=
-            ceil(greatest(col("a.n"), col("b.n")) * PrefixTau))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    selfPairs(prefix, Seq("h"),
+        least(col("a.n"), col("b.n")) >= ceil(greatest(col("a.n"), col("b.n")) * PrefixTau))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("na"), col("b.n").as("nb"))
       .distinct()
   }
+
+  /** The (doc_a, doc_b) pairs d20 verifies — exposed for the spec's
+    * completeness/efficiency laws (output census ⊆ candidates;
+    * candidates strictly fewer than the full inverted-index meets). */
+  private[graft] def d20Candidates(s: SparkSession, d: String): DataFrame =
+    prefixCandidates(shingleIndex(docShingles(s, d))).select(col("doc_a"), col("doc_b"))
 
   // --- d21: the adversarial document-frequency regime -------------------
 
@@ -415,7 +408,7 @@ object Dedup {
     prefixJoinOver(docShinglesOf(hostileDocs(s, d)))
 
   private[graft] def d21Candidates(s: SparkSession, d: String): DataFrame =
-    candidatesOver(docShinglesOf(hostileDocs(s, d)))
+    prefixCandidates(shingleIndex(hostileShingles(s, d))).select(col("doc_a"), col("doc_b"))
 
   // --- d22: posting-list df-cap for the exact inverted index ------------
 
@@ -437,75 +430,31 @@ object Dedup {
     * quadratic in N on the head shingles alone. Measured trajectory
     * (hostile regime, growing slices): 2 k docs → 713 k meets, 5 k →
     * 70.6 M, 15 k → 660 M (≈ N²), while the capped index pays 15.3 k /
-    * 1.27 M / 12.1 M (≤ cap·|postings| — linear). Wall on 15 k docs at
-    * local[16]: the full-index pipeline ≈ 190-210 s, this pipeline ≈
-    * 87-111 s, and the gap is the quadratic term — at the row's FIXED
-    * 2000-doc slice the cap actually LOSES (~4 s vs ~2 s: the df window
-    * is an extra pass and 713 k meets are trivial), which is exactly the
-    * point: the cap buys an asymptotic bound, not a toy-SF win, and the
-    * fixed slice exists to bound the ORACLE. The fix that keeps
-    * EXACTNESS:
-    * candidates come from the df ≤ [[DfCap]] postings only, then every
-    * candidate is verified against the FULL shingle sets (d20's
-    * id-keyed counting joins), so the output equals the cap-free
-    * J ≥ 0.6 census whenever every true pair shares at least one
-    * sub-cap shingle — which the hash-checking cap-FREE oracle proves
-    * per run, not assumes (a boilerplate-only true pair would mismatch).
+    * 1.27 M / 12.1 M (≤ cap·|postings| — linear). The cap buys an
+    * asymptotic bound, not a toy-SF win; the row's fixed 2000-doc slice
+    * exists to bound the ORACLE.
     *
-    * Scale: one shingle pass (localCheckpoint, d20's discipline) feeds
-    * the df filter, the sizes aggregate, and both verify sides; the df
-    * window and self-join shuffle on `h`; the verify joins are id-keyed
-    * shuffle-hash — no pair-list or index broadcast. The cap turns the
-    * index join's worst case from Σ df² (unbounded, corpus-shaped) into
-    * ≤ cap·|postings| (linear in the corpus), the same bound the
-    * SSJoin prefix gives d20 by ordering instead of dropping. */
-  def d22DfCapIndex(s: SparkSession, d: String): DataFrame = {
-    val inv = docShinglesOf(hostileDocs(s, d))
-      .select(col("doc_id"), explode(col("sh")).as("sg"))
-      .select(col("doc_id"), xxhash64(col("sg")).as("h"))
-      .localCheckpoint(true)
-    val cand = d22CandidatesOver(inv)
-    val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // exact verify on FULL sets — d20's counting form: candidates join
-    // back to the uncapped index BY ID, so dropped head postings still
-    // count toward c and the Jaccard is the true one
-    cand
-      .join(inv.select(col("doc_id").as("doc_a"), col("h")).hint("shuffle_hash"),
-        "doc_a")
-      .join(inv.select(col("doc_id").as("doc_b"), col("h")).hint("shuffle_hash"),
-        Seq("doc_b", "h"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("c"))
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .withColumn("jaccard",
-        col("c").cast("double") / (col("sa.n") + col("sb.n") - col("c")).cast("double"))
-      .filter(col("jaccard") >= 0.6)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+    * d22 IS d02's split-count over the hostile slice ([[d02Over]]): the
+    * over-cap hash set is never empty there, so candidates come from the
+    * df ≤ [[DfCap]] postings only, and each candidate's common count is
+    * its sub-cap count plus the over-cap hashes the pair shares — the
+    * count over the FULL shingle sets. The output therefore equals the
+    * cap-free J ≥ 0.6 census whenever every true pair shares at least
+    * one sub-cap shingle, which the hash-checking cap-FREE oracle proves
+    * per run, not assumes (a boilerplate-only true pair would mismatch). */
+  def d22DfCapIndex(s: SparkSession, d: String): DataFrame =
+    d02Over(hostileDocs(s, d))
 
-  /** d22's candidate pairs from the df-capped index — factored for the
-    * spec's efficiency/premise laws. */
-  private[graft] def d22CandidatesOver(inv: DataFrame): DataFrame = {
-    val wDf = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val capped = inv
-      .withColumn("df", count(lit(1)).over(wDf))
-      .filter(col("df") <= DfCap)
-      .select(col("doc_id"), col("h"))
-      .repartition(col("h"))
-    // shuffled-hash (round 15, guide §3.1) — see d20's candidate join
-    capped.as("a").join(capped.as("b").hint("shuffle_hash"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+  /** The sub-cap candidate pairs d02's split-count branch enumerates over
+    * a (doc_id[, n], h) index — exposed for the spec's efficiency and
+    * premise laws. */
+  private[graft] def d22CandidatesOver(inv: DataFrame): DataFrame =
+    selfPairs(inv.join(overCapHashes(inv), Seq("h"), "left_anti"), Seq("h"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-  }
 
   private[graft] def d22Candidates(s: SparkSession, d: String): DataFrame =
-    d22CandidatesOver(
-      docShinglesOf(hostileDocs(s, d))
-        .select(col("doc_id"), explode(col("sh")).as("sg"))
-        .select(col("doc_id"), xxhash64(col("sg")).as("h")))
+    d22CandidatesOver(shingleIndex(hostileShingles(s, d)))
 
   // --- d23: LSH under the adversarial regime (mega-bucket cap) ----------
 
@@ -696,18 +645,12 @@ object Dedup {
       struct(lit(c).as("chunk"),
         shiftright(col("sim"), c * 16).bitwiseAND(0xFFFFL).as("ck"))
     }
-    // one repartition exchange on the bucket key, reused by BOTH sides of
-    // the self-join (d02's pattern): without it the whole signature
-    // aggregate runs twice; the shuffle_hash hint (round 15 — SMJ's
-    // buffered-group copies were the family's top cpu leaf) keeps AQE
-    // from flipping to broadcast and cloning the build side
+    // the self-join's one exchange on the bucket key is read by both
+    // sides: without it the whole signature aggregate would run twice
     val buckets = simhash.select(col("doc_id"), col("sim"),
       explode(array(chunks: _*)).as("bk"))
       .select(col("doc_id"), col("sim"), col("bk.chunk").as("chunk"), col("bk.ck").as("ck"))
-      .repartition(col("chunk"), col("ck"))
-    buckets.as("a").join(buckets.as("b").hint("shuffle_hash"),
-        col("a.chunk") === col("b.chunk") && col("a.ck") === col("b.ck") &&
-        col("a.doc_id") < col("b.doc_id"))
+    selfPairs(buckets, Seq("chunk", "ck"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).as("hamming"))
       .distinct()
@@ -822,14 +765,11 @@ object Dedup {
           xxhash64(concat_ws(" ",
             slice(col("toks"), i * PlantedChunkTokens + 1, lit(PlantedChunkTokens)))))))
       .toDF("doc_id", "ci", "cfp")
-      // shared exchange for the self-join's two sides (tokenize once)
-      .repartition(col("ci"), col("cfp"))
-    val cand = chunkFps.as("a").join(chunkFps.as("b").hint("shuffle_hash"),
-        col("a.ci") === col("b.ci") && col("a.cfp") === col("b.cfp") &&
-        col("a.doc_id") < col("b.doc_id"))
+    // both sides read the self-join's one exchange (tokenize once)
+    val cand = selfPairs(chunkFps, Seq("ci", "cfp"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .localCheckpoint(eager = true) // tiny; consumed three times below
+      .localCheckpoint(eager = true) // tiny; read twice below
     // shingle ONLY the candidate docs: the semi-join runs against the raw
     // scan BEFORE the shingle projection, so the interpreted HOF shingle
     // pipeline touches O(candidates) rows, not the whole corpus (the
@@ -1382,26 +1322,24 @@ object Dedup {
     * complement in published dedup recipes (containment / superset
     * detection) to d02's near-dup pass.
     *
-    * Scale shape: d02's inverted-index machinery verbatim — shingles
-    * hash in the generator, the only data shuffle keys on the 64-bit
-    * shingle hash, pair candidates come from the index join (bounded by
-    * shared-shingle mass, never all-pairs), and the two threshold
+    * Scale shape: d02's inverted-index machinery verbatim — the
+    * [[shingleIndex]], whose sizes ride the postings, and d02's
+    * [[pairCounts]] over the [[selfPairs]] candidate join (bounded by
+    * shared-shingle mass, never all-pairs), so the only data shuffle
+    * keys on the 64-bit shingle hash. Each unordered pair is counted
+    * once and emitted in both orientations, and the two threshold
     * comparisons happen BEFORE rounding with the same expression text
     * in both engines. */
   def d15Containment(s: SparkSession, d: String): DataFrame = {
-    val inv = docShingles(s, d)
-      .select(col("doc_id"), explode(col("sh")).as("sg"))
-      .select(col("doc_id"), xxhash64(col("sg")).as("h"))
-      .repartition(col("h"))
-    val sizes = inv.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // shuffled-hash (round 15, guide §3.1) — see d20's candidate join
-    val common = inv.as("a").join(inv.as("b").hint("shuffle_hash"),
-        col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_id"), col("b.doc_id").as("host_id"))
-      .agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.withColumnRenamed("n", "na"), "doc_id")
-      .join(sizes.select(col("doc_id").as("host_id"), col("n").as("nb")), "host_id")
+    // c once per unordered pair, then both orientations: (doc, host)
+    // and (host, doc) share c and swap the set sizes
+    pairCounts(shingleIndex(docShingles(s, d)), "c")
+      .select(col("c"), explode(array(
+        struct(col("doc_a").as("doc_id"), col("doc_b").as("host_id"),
+          col("na"), col("nb")),
+        struct(col("doc_b").as("doc_id"), col("doc_a").as("host_id"),
+          col("nb").as("na"), col("na").as("nb")))).as("o"))
+      .select(col("o.*"), col("c"))
       .select(col("doc_id"), col("host_id"),
         col("na").as("n_shingles"),
         (col("c") * lit(1.0) / col("na")).as("containment_raw"),

@@ -300,4 +300,26 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(out(2L)._2 == 0L && out(2L)._3 == 0.0, s"clean doc flagged: ${out(2L)}")
     assert(out(3L)._2 == 1L, s"expected exactly one shared shingle: ${out(3L)}")
   }
+
+  test("the candidate self-join and the shingle index are each built in one place") {
+    import scala.jdk.CollectionConverters._
+    val lines = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get("src/main/scala/graft/dedup/Dedup.scala")).asScala.toIndexedSeq
+    // a def's body: its line through the line before the first blank line
+    // or the closing brace of a braced body
+    def body(name: String): Range = {
+      val at = lines.indexWhere(_.contains(s"def $name("))
+      val end = lines.indexWhere(l => l.trim.isEmpty || l == "  }", at)
+      assert(at >= 0 && end > at, (name, at, end))
+      at to end
+    }
+    def sites(p: String => Boolean): Seq[Int] = lines.indices.filter(i => p(lines(i)))
+    val selfJoins = sites(_.contains(""".as("b").hint("shuffle_hash")"""))
+    assert(selfJoins.nonEmpty && selfJoins.forall(body("selfPairs").contains),
+      s"candidate self-join outside selfPairs at lines ${selfJoins.map(_ + 1)}")
+    val index = sites(l => l.contains("""xxhash64(col("sg")).as("h")""") && l.contains("""col("doc_id")"""))
+    val allowed = body("shingleIndex") ++ body("d02UncappedCensusOver")
+    assert(index.nonEmpty && index.forall(allowed.contains),
+      s"(doc_id, h) index built outside shingleIndex at lines ${index.map(_ + 1)}")
+  }
 }

@@ -100,17 +100,86 @@ class PlanSpec extends SparkSpec {
 
   test("d02: the over-cap split is a semi/anti join on the one over-cap hash set — no Window") {
     import graft.dedup.Dedup
-    val plan = executedFull(Dedup.d02Over(Dedup.hostileDocs(spark, sf)))
-    assert(!plan.contains("Window"), plan)
-    assert(plan.contains("LeftSemi"), plan)
+    // d22 is d02's split-count over the same hostile slice
+    Seq(Dedup.d02Over(Dedup.hostileDocs(spark, sf)), Dedup.d22DfCapIndex(spark, sf)).foreach { df =>
+      val plan = executedFull(df)
+      assert(!plan.contains("Window"), plan)
+      assert(plan.contains("LeftSemi"), plan)
+    }
   }
 
   test("d02: the hostile corpus's set sizes ride the index — no doc_id-keyed size aggregate") {
     import graft.dedup.Dedup
-    val plan = executedFull(Dedup.d02Over(Dedup.hostileDocs(spark, sf)))
-    assert(plan.contains("LeftSemi"), plan) // the split-count branch ran
-    val sizeAgg = """HashAggregate\(keys=\[doc_id#\d+L?\], functions=\[[^\]]*count\(""".r
-    assert(sizeAgg.findFirstIn(plan).isEmpty, plan)
+    // (frame, whether it takes the split-count branch): d15 reads its
+    // sizes off the same index on the natural corpus, where nothing is split
+    Seq(Dedup.d02Over(Dedup.hostileDocs(spark, sf)) -> true,
+        Dedup.d22DfCapIndex(spark, sf) -> true,
+        Dedup.d15Containment(spark, sf) -> false).foreach { case (df, split) =>
+      val plan = executedFull(df)
+      if (split) assert(plan.contains("LeftSemi"), plan) // the split-count branch ran
+      val sizeAgg = """HashAggregate\(keys=\[doc_id#\d+L?\], functions=\[[^\]]*count\(""".r
+      assert(sizeAgg.findFirstIn(plan).isEmpty, plan)
+    }
+  }
+
+  test("dedup candidate self-joins: one ShuffledHashJoin over an exchange and its reuse") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
+    object Stages extends AdaptiveSparkPlanHelper
+    def names(ks: Seq[Expression]): Seq[String] =
+      ks.map { case a: AttributeReference => a.name; case e => e.sql }
+    def source(p: SparkPlan): SparkPlan = p match {
+      case i: InputAdapter => source(i.child)
+      case w: WholeStageCodegenExec => source(w.child)
+      case r: AQEShuffleReadExec => source(r.child)
+      case q: QueryStageExec => source(q.plan)
+      case other => other
+    }
+    def d20Verify(plan: String): Unit = {
+      // the prefix frame funnels through one repartition(h) that both
+      // self-join sides consume (d02's ReusedExchange pattern)
+      assert(plan.contains("ReusedExchange"), plan)
+      // the exact-Jaccard verify must fetch texts with PARTITIONED joins
+      // (d16's rule: a pair list grows with dup structure and must never
+      // be a broadcast build side carrying shingle payloads)
+      assert(plan.linesIterator.count(l =>
+        l.contains("ShuffledHashJoin [doc_a") || l.contains("ShuffledHashJoin [doc_b")) == 2,
+        plan)
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"), plan)
+    }
+    // (row, frame, candidate key, the row's own further plan checks)
+    val rows: Seq[(String, () => DataFrame, Seq[String], String => Unit)] = Seq(
+      ("d02", () => Dedup.d02NgramJaccard(spark, sf), Seq("h"), _ => ()),
+      ("d02 hostile", () => Dedup.d02Over(Dedup.hostileDocs(spark, sf)), Seq("h"), _ => ()),
+      ("d04", () => Dedup.d04SimHash(spark, sf), Seq("chunk", "ck"), _ => ()),
+      ("d15", () => Dedup.d15Containment(spark, sf), Seq("h"), _ => ()),
+      ("d20", () => Dedup.d20PrefixJoin(spark, sf), Seq("h"), d20Verify),
+      ("d21", () => Dedup.d21PrefixHostile(spark, sf), Seq("h"), _ => ()))
+    rows.foreach { case (row, frame, keys, further) =>
+      val df = frame()
+      val text = executed(df)
+      val plan = df.queryExecution.executedPlan
+      val cand = Stages.collect(plan) { case j: ShuffledHashJoinExec if names(j.leftKeys) == keys => j }
+      assert(cand.size == 1, s"$row: ${cand.size} candidate joins on $keys\n$plan")
+      (source(cand.head.left), source(cand.head.right)) match {
+        case (e: ShuffleExchangeExec, r: ReusedExchangeExec) =>
+          assert(e.outputPartitioning.isInstanceOf[HashPartitioning], s"$row\n$plan")
+          assert(r.child.sameResult(e), s"$row: the reused side is another exchange\n$plan")
+        case (l, r) =>
+          fail(s"$row: sides ${l.nodeName}/${r.nodeName}, not an exchange and its reuse\n$plan")
+      }
+      assert(Stages.collect(plan) {
+        case j: SortMergeJoinExec if keys.forall(names(j.leftKeys).contains) => j
+      }.isEmpty, s"$row\n$plan")
+      further(text)
+    }
   }
 
   test("dupClusters: a propagation round is one shuffle exchange and no broadcast") {
@@ -692,21 +761,6 @@ class PlanSpec extends SparkSpec {
     // hash joins also proves no text payload ever rides a broadcast
     // (candidate-only broadcasts inside the verify stage are fine: AQE
     // sizes those at runtime, never forced)
-  }
-
-  test("d20: prefix self-join reuses one exchange; verify joins are id-partitioned, never a pair broadcast") {
-    val plan = executed(graft.dedup.Dedup.d20PrefixJoin(spark, sf))
-    // the prefix frame funnels through one repartition(h) that both
-    // self-join sides consume (d02's ReusedExchange pattern)
-    assert(plan.contains("ReusedExchange"), plan)
-    // the exact-Jaccard verify must fetch texts with PARTITIONED joins
-    // (d16's rule: a pair list grows with dup structure and must never
-    // be a broadcast build side carrying shingle payloads)
-    assert(plan.linesIterator.count(l =>
-      l.contains("ShuffledHashJoin [doc_a") || l.contains("ShuffledHashJoin [doc_b")) == 2,
-      plan)
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
   test("q47: both distinct-count windows share one user exchange (two sorts, no second shuffle)") {
