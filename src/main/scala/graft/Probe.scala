@@ -174,8 +174,11 @@ object Probe {
         GraftAccess.drainListenerBus(spark.sparkContext); spark.listenerManager.unregister(l)
       }
       // collect() runs df's own QueryExecution (a noop write would plan a
-      // new one), so the explain below shows AQE's final runtime choices
+      // new one), so the explain below shows AQE's final runtime choices.
+      // Its completion event is drained here, before the next query's
+      // listener registers, so it is never listed as that query's.
       df.collect()
+      GraftAccess.drainListenerBus(spark.sparkContext)
       subs.asScala.toSeq :+ s"== $n FINAL PLAN ==\n${fullPlan(df.queryExecution)}"
     }
 

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Catalog registration + partition discovery (SURVEY §3.4) — the
   * reference's Glue database + nightly crawler (SDP.py:581-616) collapsed
@@ -119,7 +120,11 @@ object CatalogSync {
   /** The planner-visible row count for a catalog table under CBO — the
     * contract [[analyze]] exists to satisfy: `Some(exact rows)` when
     * stats are recorded and `spark.sql.cbo.enabled` is on, `None` when
-    * the optimizer is back to file-size-only estimates. */
+    * the optimizer is back to file-size-only estimates. Stats read the
+    * conf of the thread's active session, so `spark`'s is pinned: a
+    * session from `Session.isolated` is never the active one. */
   def plannerRowCount(spark: SparkSession, table: String): Option[BigInt] =
-    spark.table(table).queryExecution.optimizedPlan.stats.rowCount
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      spark.table(table).queryExecution.optimizedPlan.stats.rowCount
+    }
 }

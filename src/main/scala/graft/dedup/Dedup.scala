@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{Observed, Tables}
+import graft.{Materialize, Observed, Tables}
 import graft.sink.Sinks
 import graft.text.TextAnalysis.{normText, tokens}
 import graft.functions.{MinHashBands, VectorFunctions}
@@ -852,41 +852,26 @@ object Dedup {
     * hash exchange in the plan (asserted in PlanSpec). The merge hint
     * keeps the join sort-merge: a broadcast of the history side would be
     * cheaper at toy SF but is exactly what cannot work at 100 TB of
-    * accumulated fingerprints. */
-  /** Dirs created for d06 history tables this JVM, deleted at exit. The
-    * table name AND path are per-INVOCATION (UUID suffix): a fixed name
-    * races two concurrent calls in one session on drop/recreate, and a
-    * fixed path races two calls in one JVM on overwrite, corrupting a
-    * table mid-scan. The returned DataFrame scans the table lazily, so
-    * cleanup cannot happen at call exit — each invocation leaks one small
-    * fingerprint dir, reaped by the shutdown hook. */
-  private val d06Dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      d06Dirs.forEach { dir =>
-        try {
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          rm(dir)
-        } catch { case _: Throwable => () }
-      }))
-  }
+    * accumulated fingerprints.
+    *
+    * The table name is per-INVOCATION (UUID suffix): a fixed name races
+    * two concurrent calls in one session on drop/recreate. The table
+    * lives under the scope's temp dir and is dropped when it closes. */
+  def d06IncrementalDedup(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-d06-history-fp-")(m => d06Over(s, d, m))
 
-  def d06IncrementalDedup(s: SparkSession, d: String): DataFrame = {
+  /** d06's lazy plan over a history table registered in `m`. */
+  private[graft] def d06Over(s: SparkSession, d: String, m: Materialize.Scope): DataFrame = {
     val docs = Tables.documents(s, d)
     val history = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)
     val historyFp = history.select(md5(normText(col("text"))).as("fp"))
     val buckets = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-    val table = s"graft_d06_history_fp_$tag"
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-d06-history-fp-$tag"
-    d06Dirs.add(new java.io.File(path))
+    val table = "graft_d06_history_fp_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    m.onClose { s.sql(s"DROP TABLE IF EXISTS $table"); () }
     Sinks.writeBucketed(historyFp, table, "fp",
       numBuckets = buckets,
-      path = Some(path))
+      path = Some(s"${m.tmp}/fp"))
     incrementalExactDedup(batch, s.table(table).hint("merge"))
       .select(col("doc_id"), col("fp"))
       .orderBy(col("doc_id"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Session, Tables}
+import graft.{Materialize, Session, Tables}
 import graft.catalog.CatalogSync
 import graft.model.PipelineLayout
 import graft.orchestrate.ReferencePipeline
@@ -26,20 +26,6 @@ object ControlPlaneQueries {
     * keeps the hour-partition count small. */
   val E2eFeedEnd = "2024-01-04"
 
-  // package-shared (p30 reuses it): one copy of the tmp-dir lifecycle,
-  // not three drifting ones
-  private[queries] def withTmp[A](s: SparkSession, prefix: String)(body: String => A): A = {
-    val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
-    try body(tmp)
-    finally {
-      try {
-        val p = new org.apache.hadoop.fs.Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-      } catch { case _: Throwable => () }
-    }
-  }
-
   /** x01: the reference pipeline (§3.1) as a hard row — validate → route
     * (invalid rows quarantined) → archive → transform → staged partitioned
     * write → quality gate → atomic promote, with every stage journaled by
@@ -51,7 +37,7 @@ object ControlPlaneQueries {
     * (score 1.0 > 0.8), so a FAILED outcome — which this query turns into
     * an exception — means the gate scored the wrong frame. */
   def x01PipelineE2e(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x01-") { tmp =>
+    Materialize.scoped(s, "graft-x01-") { m =>
       // Round 15: the round-14 narrow-floor session pin is gone — the
       // staged write's parallelism now comes from Sinks.writePartitioned's
       // explicit repartition (floor-insensitive by construction), so the
@@ -59,8 +45,8 @@ object ControlPlaneQueries {
       val s2 = Session.isolated(s)
       val ev = Tables.events(s2, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
-      val layout = PipelineLayout(s"$tmp/lake")
-      val stateLog = new StateLog(s2, s"$tmp/state")
+      val layout = PipelineLayout(s"${m.tmp}/lake")
+      val stateLog = new StateLog(s2, s"${m.tmp}/state")
       val spec = ReferencePipeline.Spec(
         rules = PipelineQueries.eventRules,
         transform = identity[DataFrame] _,
@@ -76,8 +62,6 @@ object ControlPlaneQueries {
           coalesce(col("n_processed"), lit(0L)).as("n_processed"),
           coalesce(col("n_quarantined"), lit(0L)).as("n_quarantined"))
         .orderBy(col("event_type"))
-        // materialize before the temp lake the plan reads from is deleted
-        .localCheckpoint(eager = true)
     }
 
   /** x02: the analytics path (§3.4) as a hard row — partitioned landing,
@@ -89,27 +73,22 @@ object ControlPlaneQueries {
     * break it. The `day <= 2` predicate prunes at the catalog level
     * (partition directories, not row filters — asserted in PlanSpec). */
   def x02CatalogSql(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x02-") { tmp =>
+    Materialize.scoped(s, "graft-x02-") { m =>
       // Round 15: narrow-floor pin removed — see x01 (the write path's
       // explicit repartition made the floor irrelevant to this row).
       val s2 = Session.isolated(s)
       val ev = Tables.events(s2, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
-      Sinks.writePartitioned(ev, s"$tmp/t")
+      Sinks.writePartitioned(ev, s"${m.tmp}/t")
       val table = "graft_x02_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      CatalogSync.register(s2, table, s"$tmp/t")
-      try {
-        s2.sql(
-          s"""SELECT year, month, day, hour, count(*) AS n_rows,
-             |       round(sum(value), 6) AS sum_value
-             |FROM $table WHERE day <= 2
-             |GROUP BY year, month, day, hour
-             |ORDER BY year, month, day, hour""".stripMargin)
-          .localCheckpoint(eager = true)
-      } finally {
-        try { s.sql(s"DROP TABLE IF EXISTS $table"); () }
-        catch { case _: Throwable => () }
-      }
+      m.onClose { s2.sql(s"DROP TABLE IF EXISTS $table"); () }
+      CatalogSync.register(s2, table, s"${m.tmp}/t")
+      s2.sql(
+        s"""SELECT year, month, day, hour, count(*) AS n_rows,
+           |       round(sum(value), 6) AS sum_value
+           |FROM $table WHERE day <= 2
+           |GROUP BY year, month, day, hour
+           |ORDER BY year, month, day, hour""".stripMargin)
     }
 
   /** x03: the Parallel scatter/gather operator (§2.10 X3, the reference's
@@ -123,11 +102,11 @@ object ControlPlaneQueries {
     * partial scatter all break n_events/sum_value, and n_branches pins
     * every type having flowed through all 3 branches. */
   def x03ParallelScatter(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x03-") { tmp =>
+    Materialize.scoped(s, "graft-x03-") { m =>
       import graft.orchestrate.{Flow, PipelineRunner}
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
-      val stateLog = new StateLog(s, s"$tmp/state")
+      val stateLog = new StateLog(s, s"${m.tmp}/state")
       val branches = (0 until 3).map { k =>
         (df: DataFrame) =>
           df.filter(pmod(col("user_id"), lit(3)) === k)
@@ -146,14 +125,12 @@ object ControlPlaneQueries {
             countDistinct(col("branch")).as("n_branches")),
           Flow.Task("land",
             { df => df.coalesce(1).write.mode("overwrite")
-                      .parquet(s"$tmp/out"); df },
+                      .parquet(s"${m.tmp}/out"); df },
             Flow.Succeed())))
       val outcome = new PipelineRunner(stateLog).run("x03", flow, ev)
       require(outcome.isSuccess, s"x03 parallel flow failed: $outcome")
-      s.read.parquet(s"$tmp/out")
+      s.read.parquet(s"${m.tmp}/out")
         .orderBy(col("event_type"))
-        // materialize before the temp dir the plan reads from is deleted
-        .localCheckpoint(eager = true)
     }
 
   /** x04: Step Functions MAP state ([[graft.orchestrate.Flow.MapState]])
@@ -167,11 +144,11 @@ object ControlPlaneQueries {
     * per-item filter is the partition key, so each branch
     * partition-prunes its scan. */
   def x04MapState(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x04-") { tmp =>
+    Materialize.scoped(s, "graft-x04-") { m =>
       import graft.orchestrate.{Flow, PipelineRunner}
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
-      val stateLog = new StateLog(s, s"$tmp/state")
+      val stateLog = new StateLog(s, s"${m.tmp}/state")
       val flow = Flow.MapState("map_event_types",
         items = df => df.select(col("event_type")).distinct()
           .collect().map(_.getString(0)).sorted.toSeq,
@@ -183,15 +160,14 @@ object ControlPlaneQueries {
           .withColumn("event_type", lit(t)),
         next = Flow.Task("land",
           { df => df.coalesce(1).write.mode("overwrite")
-                    .parquet(s"$tmp/out"); df },
+                    .parquet(s"${m.tmp}/out"); df },
           Flow.Succeed()))
       val outcome = new PipelineRunner(stateLog).run("x04", flow, ev)
       require(outcome.isSuccess, s"x04 map flow failed: $outcome")
-      s.read.parquet(s"$tmp/out")
+      s.read.parquet(s"${m.tmp}/out")
         .select(col("event_type"), col("n_events"),
           col("sum_value"), col("n_users"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   /** x05: the PRIORITY LANE (§2.10 X7, the reference's priority queue,
@@ -215,14 +191,14 @@ object ControlPlaneQueries {
     * Completion ORDER is wall-clock (FAIR weights under load), so it is
     * deliberately not oracled — lane accounting is. */
   def x05PriorityLanes(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x05-") { tmp =>
+    Materialize.scoped(s, "graft-x05-") { m =>
       import graft.model.{PipelineOutcome, PipelineStatus}
       import graft.service.PipelineService
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
       val ev = Tables.events(s, d)
         .filter(col("ts") < lit(E2eFeedEnd).cast("timestamp"))
-      val stateLog = new StateLog(s, s"$tmp/state")
+      val stateLog = new StateLog(s, s"${m.tmp}/state")
       val service = new PipelineService(s, stateLog)
       // job-group id → scheduler pool, as Spark's scheduler saw it
       val pools = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -237,45 +213,43 @@ object ControlPlaneQueries {
         }
       }
       s.sparkContext.addSparkListener(listener)
-      try {
-        def lane(name: String, parity: Int): String =
-          service.start({ id =>
-            ev.filter(pmod(col("event_id"), lit(2)) === parity)
-              .agg(count(lit(1)).as("n_rows"),
-                round(sum(round(col("value") * 1000000).cast("long")) * lit(1.0)
-                  / lit(1000000.0), 6).as("sum_value"))
-              .withColumn("priority", lit(name))
-              .coalesce(1).write.mode("overwrite").parquet(s"$tmp/out_$name")
-            stateLog.append(id, "pipeline", PipelineStatus.Succeeded,
-              s"lane=$name landed")
-            PipelineOutcome.Succeeded(1.0)
-          }, priority = name)
-        // start both, then await both: the runs overlap
-        val ids = Seq("high" -> lane("high", 0), "normal" -> lane("normal", 1))
-        ids.foreach { case (n, id) =>
-          val outcome = service.await(id)
-          require(outcome.exists(_.isSuccess), s"x05 lane $n failed: $outcome")
-        }
-        // listener delivery is async — drain the bus so both job groups'
-        // pool observations have arrived
-        org.apache.spark.GraftAccess.drainListenerBus(s.sparkContext)
-        val perLane = ids.map { case (name, id) =>
-          // the full journal (list() serves only the latest row per id):
-          // exactly two appends — submitted, succeeded
-          val nJournal = stateLog.journal()
-            .filter(col("pipeline_id") === id).count()
-          val finalStatus = stateLog.currentStatus(id).map(_.status).getOrElse("?")
-          val rollup = s.read.parquet(s"$tmp/out_$name").head()
-          (name, Option(pools.get(id)).getOrElse("?"),
-            rollup.getAs[Long]("n_rows"), rollup.getAs[Double]("sum_value"),
-            nJournal, finalStatus)
-        }
-        import s.implicits._
-        perLane.toDF("priority", "observed_pool", "n_rows", "sum_value",
-            "n_journal", "final_status")
-          .orderBy(col("priority"))
-          .localCheckpoint(eager = true)
-      } finally s.sparkContext.removeSparkListener(listener)
+      m.onClose(s.sparkContext.removeSparkListener(listener))
+      def lane(name: String, parity: Int): String =
+        service.start({ id =>
+          ev.filter(pmod(col("event_id"), lit(2)) === parity)
+            .agg(count(lit(1)).as("n_rows"),
+              round(sum(round(col("value") * 1000000).cast("long")) * lit(1.0)
+                / lit(1000000.0), 6).as("sum_value"))
+            .withColumn("priority", lit(name))
+            .coalesce(1).write.mode("overwrite").parquet(s"${m.tmp}/out_$name")
+          stateLog.append(id, "pipeline", PipelineStatus.Succeeded,
+            s"lane=$name landed")
+          PipelineOutcome.Succeeded(1.0)
+        }, priority = name)
+      // start both, then await both: the runs overlap
+      val ids = Seq("high" -> lane("high", 0), "normal" -> lane("normal", 1))
+      ids.foreach { case (n, id) =>
+        val outcome = service.await(id)
+        require(outcome.exists(_.isSuccess), s"x05 lane $n failed: $outcome")
+      }
+      // listener delivery is async — drain the bus so both job groups'
+      // pool observations have arrived
+      org.apache.spark.GraftAccess.drainListenerBus(s.sparkContext)
+      val perLane = ids.map { case (name, id) =>
+        // the full journal (list() serves only the latest row per id):
+        // exactly two appends — submitted, succeeded
+        val nJournal = stateLog.journal()
+          .filter(col("pipeline_id") === id).count()
+        val finalStatus = stateLog.currentStatus(id).map(_.status).getOrElse("?")
+        val rollup = s.read.parquet(s"${m.tmp}/out_$name").head()
+        (name, Option(pools.get(id)).getOrElse("?"),
+          rollup.getAs[Long]("n_rows"), rollup.getAs[Double]("sum_value"),
+          nJournal, finalStatus)
+      }
+      import s.implicits._
+      perLane.toDF("priority", "observed_pool", "n_rows", "sum_value",
+          "n_journal", "final_status")
+        .orderBy(col("priority"))
     }
 
   /** x06: the crawler's STATISTICS half as a hard row (§2.10 X8 — Glue
@@ -298,45 +272,34 @@ object ControlPlaneQueries {
     * absent — proving the number flows from the recorded stats, not from
     * some other estimator. */
   def x06CatalogStats(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-x06-") { tmp =>
+    Materialize.scoped(s, "graft-x06-") { m =>
+      val s2 = Session.isolated(s, "spark.sql.cbo.enabled" -> "true")
       val specs = Seq(
-        ("customer", Tables.customer(s, d), "c_custkey"),
-        ("orders", Tables.orders(s, d), "o_custkey"))
-      val cboBefore = s.conf.get("spark.sql.cbo.enabled", "false")
-      val registered = scala.collection.mutable.ListBuffer.empty[String]
-      try {
-        s.conf.set("spark.sql.cbo.enabled", "true")
-        val perTable = specs.map { case (name, df, key) =>
-          val table = "graft_x06_" + name + "_" +
-            java.util.UUID.randomUUID().toString.replace("-", "")
-          df.write.parquet(s"$tmp/$name")
-          CatalogSync.register(s, table, s"$tmp/$name", partitionCols = Seq.empty)
-          registered += table
-          require(CatalogSync.plannerRowCount(s, table).isEmpty,
-            s"x06: planner row count present before ANALYZE on $table")
-          CatalogSync.analyze(s, table, columns = Seq(key))
-          val nRows = CatalogSync.plannerRowCount(s, table)
-            .getOrElse(sys.error(s"x06: no planner row count after ANALYZE on $table"))
-            .toLong
-          val stats = CatalogSync.columnStats(s, table, key)
-          val ndv = stats("distinct_count").toLong
-          val exactNdv = df.select(countDistinct(col(key))).head().getLong(0)
-          (name, nRows, stats("num_nulls").toLong,
-            stats("min").toLong, stats("max").toLong,
-            math.abs(ndv - exactNdv) <= exactNdv / 10)
-        }
-        import s.implicits._
-        perTable.toDF("table_name", "n_rows", "n_nulls",
-            "min_key", "max_key", "ndv_ok")
-          .orderBy(col("table_name"))
-          .localCheckpoint(eager = true)
-      } finally {
-        registered.foreach { t =>
-          try { s.sql(s"DROP TABLE IF EXISTS $t"); () }
-          catch { case _: Throwable => () }
-        }
-        s.conf.set("spark.sql.cbo.enabled", cboBefore)
+        ("customer", Tables.customer(s2, d), "c_custkey"),
+        ("orders", Tables.orders(s2, d), "o_custkey"))
+      val perTable = specs.map { case (name, df, key) =>
+        val table = "graft_x06_" + name + "_" +
+          java.util.UUID.randomUUID().toString.replace("-", "")
+        df.write.parquet(s"${m.tmp}/$name")
+        m.onClose { s2.sql(s"DROP TABLE IF EXISTS $table"); () }
+        CatalogSync.register(s2, table, s"${m.tmp}/$name", partitionCols = Seq.empty)
+        require(CatalogSync.plannerRowCount(s2, table).isEmpty,
+          s"x06: planner row count present before ANALYZE on $table")
+        CatalogSync.analyze(s2, table, columns = Seq(key))
+        val nRows = CatalogSync.plannerRowCount(s2, table)
+          .getOrElse(sys.error(s"x06: no planner row count after ANALYZE on $table"))
+          .toLong
+        val stats = CatalogSync.columnStats(s2, table, key)
+        val ndv = stats("distinct_count").toLong
+        val exactNdv = df.select(countDistinct(col(key))).head().getLong(0)
+        (name, nRows, stats("num_nulls").toLong,
+          stats("min").toLong, stats("max").toLong,
+          math.abs(ndv - exactNdv) <= exactNdv / 10)
       }
+      import s2.implicits._
+      perTable.toDF("table_name", "n_rows", "n_nulls",
+          "min_key", "max_key", "ndv_ok")
+        .orderBy(col("table_name"))
     }
 
   /** Micro-second-preserving timestamp format for the CSV leg (Spark's
@@ -357,17 +320,17 @@ object ControlPlaneQueries {
     * columnar and CSV only ever appears at the ingest edge. The value
     * sum rides micro-scaled integers (the order-free idiom). */
   def k01FormatRoundtrip(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k01-") { tmp =>
+    Materialize.scoped(s, "graft-k01-") { m =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"), col("ts"))
       ev.write.mode("overwrite")
         .option("header", "true").option("timestampFormat", CsvTsFormat)
-        .csv(s"$tmp/csv")
-      ev.write.mode("overwrite").orc(s"$tmp/orc")
+        .csv(s"${m.tmp}/csv")
+      ev.write.mode("overwrite").orc(s"${m.tmp}/orc")
       val csv = s.read.schema(ev.schema)
         .option("header", "true").option("timestampFormat", CsvTsFormat)
-        .csv(s"$tmp/csv")
-      val orc = s.read.orc(s"$tmp/orc")
+        .csv(s"${m.tmp}/csv")
+      val orc = s.read.orc(s"${m.tmp}/orc")
       def rollup(df: DataFrame, format: String): DataFrame =
         df.select(lit(format).as("format"), col("event_type"),
             round(col("value") * 1000000).cast("long").as("scaled"),
@@ -379,7 +342,6 @@ object ControlPlaneQueries {
             countDistinct(col("h")).as("n_hours"))
       rollup(csv, "csv").unionByName(rollup(orc, "orc"))
         .orderBy(col("format"), col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   /** k03: the JSON round-trip leg — the reference's NATIVE interchange
@@ -393,16 +355,16 @@ object ControlPlaneQueries {
     * JSON here. e2e-tagged like k01 (real write+read I/O vs a
     * parquet-only oracle). */
   def k03JsonRoundtrip(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k03-") { tmp =>
+    Materialize.scoped(s, "graft-k03-") { m =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"),
           col("ts"), col("props"))
       ev.write.mode("overwrite")
         .option("timestampFormat", CsvTsFormat)
-        .json(s"$tmp/json")
+        .json(s"${m.tmp}/json")
       val back = s.read.schema(ev.schema)
         .option("timestampFormat", CsvTsFormat)
-        .json(s"$tmp/json")
+        .json(s"${m.tmp}/json")
       back
         .select(col("event_type"),
           round(col("value") * 1000000).cast("long").as("scaled"),
@@ -414,7 +376,6 @@ object ControlPlaneQueries {
           countDistinct(col("h")).as("n_hours"),
           sum(col("plen")).as("props_bytes"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   /** The k04 schema cut: files written BEFORE it carry the v1 schema
@@ -434,17 +395,17 @@ object ControlPlaneQueries {
     * years of layout history in one query (footer-level merge, no
     * rewrite of old files). */
   def k04SchemaEvolution(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k04-") { tmp =>
+    Materialize.scoped(s, "graft-k04-") { m =>
       val ev = Tables.events(s, d)
       val cut = lit(SchemaCut).cast("timestamp")
       ev.filter(col("ts") < cut)
         .select(col("event_id"), col("ts"), col("user_id"))
-        .write.mode("overwrite").parquet(s"$tmp/lake/gen=v1")
+        .write.mode("overwrite").parquet(s"${m.tmp}/lake/gen=v1")
       ev.filter(col("ts") >= cut)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("value"), col("event_type"))
-        .write.mode("overwrite").parquet(s"$tmp/lake/gen=v2")
-      val back = s.read.option("mergeSchema", "true").parquet(s"$tmp/lake")
+        .write.mode("overwrite").parquet(s"${m.tmp}/lake/gen=v2")
+      val back = s.read.option("mergeSchema", "true").parquet(s"${m.tmp}/lake")
       back.agg(
           count(lit(1)).as("n_total"),
           sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null_value"),
@@ -452,7 +413,6 @@ object ControlPlaneQueries {
           count(col("value")).as("n_v2"),
           coalesce(sum(round(col("value") * 100).cast("long")), lit(0L)).as("cents_v2"),
           countDistinct(col("event_type")).as("n_types"))
-        .localCheckpoint(eager = true)
     }
 
   /** k02: the bucketed co-located join e2e as a driver row (upgrades the
@@ -468,37 +428,31 @@ object ControlPlaneQueries {
     * e2e-tagged: the Spark side writes and re-reads two real bucketed
     * tables; the oracle is a parquet-only join. */
   def k02BucketedJoin(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k02-") { tmp =>
-      s.sql("DROP TABLE IF EXISTS k02_orders")
-      s.sql("DROP TABLE IF EXISTS k02_lineitem")
-      val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
-      val l = Tables.lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
+    Materialize.scoped(s, "graft-k02-") { m =>
+      val s2 = Session.isolated(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val tag = java.util.UUID.randomUUID().toString.replace("-", "")
+      val (orders, lineitem) = (s"graft_k02_orders_$tag", s"graft_k02_lineitem_$tag")
+      m.onClose { s2.sql(s"DROP TABLE IF EXISTS $orders"); () }
+      m.onClose { s2.sql(s"DROP TABLE IF EXISTS $lineitem"); () }
+      val o = Tables.orders(s2, d).select(col("o_orderkey"), col("o_orderpriority"))
+      val l = Tables.lineitem(s2, d).select(col("l_orderkey").as("o_orderkey"),
         col("l_extendedprice"), col("l_discount"))
-      Sinks.writeBucketed(o, "k02_orders", "o_orderkey", 8, path = Some(s"$tmp/o"))
-      Sinks.writeBucketed(l, "k02_lineitem", "o_orderkey", 8, path = Some(s"$tmp/l"))
-      val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joined = s.table("k02_orders").join(s.table("k02_lineitem"), "o_orderkey")
-        // co-location evidence from the plan that will actually run: any
-        // Exchange before the join means the bucketing didn't carry
-        val nExch = joined.queryExecution.executedPlan.toString
-          .linesIterator.count(_.contains("Exchange"))
-        joined
-          .select(col("o_orderpriority"),
-            round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
-              .cast("long").as("cents"))
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n_items"),
-            round(sum(col("cents")) * lit(1.0) / lit(100.0), 2).as("revenue"))
-          .withColumn("join_zero_exchange", lit(nExch == 0))
-          .orderBy(col("o_orderpriority"))
-          .localCheckpoint(eager = true)
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        s.sql("DROP TABLE IF EXISTS k02_orders")
-        s.sql("DROP TABLE IF EXISTS k02_lineitem")
-      }
+      Sinks.writeBucketed(o, orders, "o_orderkey", 8, path = Some(s"${m.tmp}/o"))
+      Sinks.writeBucketed(l, lineitem, "o_orderkey", 8, path = Some(s"${m.tmp}/l"))
+      val joined = s2.table(orders).join(s2.table(lineitem), "o_orderkey")
+      // co-location evidence from the plan that will actually run: any
+      // Exchange before the join means the bucketing didn't carry
+      val nExch = joined.queryExecution.executedPlan.toString
+        .linesIterator.count(_.contains("Exchange"))
+      joined
+        .select(col("o_orderpriority"),
+          round(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100)
+            .cast("long").as("cents"))
+        .groupBy(col("o_orderpriority"))
+        .agg(count(lit(1)).as("n_items"),
+          round(sum(col("cents")) * lit(1.0) / lit(100.0), 2).as("revenue"))
+        .withColumn("join_zero_exchange", lit(nExch == 0))
+        .orderBy(col("o_orderpriority"))
     }
 
   /** k05: dynamic partition pruning as a hard row — the events slice is
@@ -521,11 +475,11 @@ object ControlPlaneQueries {
     * e2e-tagged: the Spark side writes and re-reads a real partitioned
     * lake copy; the oracle is a parquet-only join. */
   def k05DppPrune(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k05-") { tmp =>
+    Materialize.scoped(s, "graft-k05-") { m =>
       val ev = Tables.events(s, d)
       ev.withColumn("event_date", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("event_date").parquet(s"$tmp/fact")
-      val fact = s.read.parquet(s"$tmp/fact")
+        .write.mode("overwrite").partitionBy("event_date").parquet(s"${m.tmp}/fact")
+      val fact = s.read.parquet(s"${m.tmp}/fact")
       val days = ev.groupBy(to_date(col("ts")).as("d_date"))
         .agg(sum(when(col("event_type") === "error", 1L).otherwise(0L))
           .as("n_errors"))
@@ -555,7 +509,6 @@ object ControlPlaneQueries {
           sum(col("micros")).as("sum_value_micros"))
         .withColumn("scan_dpp_pruned", lit(pruned))
         .orderBy(col("event_date"))
-        .localCheckpoint(eager = true)
     }
 
   /** k06's per-file row cap — sized so the ceil law bites at every test
@@ -605,7 +558,7 @@ object ControlPlaneQueries {
     * frame would silently re-scan the post-compact directory and the
     * isolation law would compare the lake to itself). */
   def k07CompactionLayout(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k07-") { tmp =>
+    Materialize.scoped(s, "graft-k07-") { m =>
       val ev = Tables.events(s, d)
         .filter(dayofmonth(col("ts")) <= FragDays)
         .select(col("event_id"), col("ts"), col("value"))
@@ -613,8 +566,8 @@ object ControlPlaneQueries {
         .repartition(FragTasks) // row-hash spray: every task hits most dirs
         .write.mode("overwrite")
         .partitionBy("year", "month", "day", "hour")
-        .parquet(s"$tmp/lake")
-      def census(): DataFrame = s.read.parquet(s"$tmp/lake")
+        .parquet(s"${m.tmp}/lake")
+      def census(): DataFrame = s.read.parquet(s"${m.tmp}/lake")
         .select(col("year"), col("month"), col("day"), col("hour"),
           input_file_name().as("f"))
         .groupBy(col("year"), col("month"), col("day"))
@@ -626,7 +579,7 @@ object ControlPlaneQueries {
         .select(col("year"), col("month"), col("day"),
           col("n_files").as("files_before"), col("paths").as("paths_before"))
         .localCheckpoint(eager = true)
-      Sinks.compactPartitioned(s, s"$tmp/lake",
+      Sinks.compactPartitioned(s, s"${m.tmp}/lake",
         scope = Some(col("day") === CompactDay))
       census().join(before, Seq("year", "month", "day"))
         .withColumn("in_scope", col("day") === CompactDay)
@@ -640,23 +593,22 @@ object ControlPlaneQueries {
           col("n_hours"), col("in_scope"), col("layout_ok"),
           col("untouched_ok"))
         .orderBy(col("year"), col("month"), col("day"))
-        .localCheckpoint(eager = true)
     }
 
   def k06FileLayout(s: SparkSession, d: String): DataFrame =
-    withTmp(s, "graft-k06-") { tmp =>
+    Materialize.scoped(s, "graft-k06-") { m =>
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
       ev.repartition(col("event_type"))
         .write.mode("overwrite")
         .option("maxRecordsPerFile", LayoutMaxRecords)
         .partitionBy("event_type")
-        .parquet(s"$tmp/lake")
+        .parquet(s"${m.tmp}/lake")
       // Pin the read-back schema: partition-column type INFERENCE would
       // round-trip a numeric- or date-looking event_type as INT/DATE
       // (and rewrite '01'-style values), diverging from the oracle's
       // VARCHAR grouping. The writer's schema is the contract.
-      val back = s.read.schema(ev.schema).parquet(s"$tmp/lake")
+      val back = s.read.schema(ev.schema).parquet(s"${m.tmp}/lake")
       back
         .select(col("event_type"),
           input_file_name().as("f"), col("event_id"))
@@ -669,7 +621,6 @@ object ControlPlaneQueries {
         .select(col("event_type"), col("n_rows"), col("n_files"),
           col("law_files"), col("law_ok"))
         .orderBy(col("event_type"))
-        .localCheckpoint(eager = true)
     }
 
   val queries: Map[String, Q] = Map(

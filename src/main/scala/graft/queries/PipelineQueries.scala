@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.quality.Quality
 import graft.quality.Quality.Check
 import graft.transform.Transform
@@ -993,11 +993,11 @@ object PipelineQueries {
     * full-run law the oracle states — and n_runs pins the straddling
     * hour to 2 (the merge actually happened). Cents ride exact longs. */
   def p30BookmarkIngest(s: SparkSession, d: String): DataFrame =
-    ControlPlaneQueries.withTmp(s, "graft-p30-") { tmp =>
+    Materialize.scoped(s, "graft-p30-") { m =>
       import graft.state.Bookmark
       val ev = Tables.events(s, d)
-      val partials = s"$tmp/partials"
-      val bm = s"$tmp/bookmark"
+      val partials = s"${m.tmp}/partials"
+      val bm = s"${m.tmp}/bookmark"
       def rollup(df: DataFrame): DataFrame =
         df.groupBy(date_trunc("hour", col("ts")).as("hour_bucket"))
           .agg(count(lit(1)).as("n"),
@@ -1017,7 +1017,6 @@ object PipelineQueries {
         .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"),
           countDistinct(col("run")).as("n_runs"))
         .orderBy(col("hour_bucket"))
-        .localCheckpoint(eager = true)
     }
 
   /** g17: ordered conversion funnel (cohort analysis) — per user, the

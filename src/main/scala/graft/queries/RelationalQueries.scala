@@ -619,12 +619,12 @@ object RelationalQueries {
     * role). The aggregate after the join is exact integers, so the
     * oracle is a plain SQL restatement. */
   def q45SkewJoin(s: SparkSession, d: String): DataFrame = {
-    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // thresholds sized to COMPRESSED shuffle bytes at toy SF (the stats
-    // AQE reads are post-lz4: the 10k-row hot partition is ~10 KB)
-    s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1k")
-    s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512b")
+    val s2 = Session.isolated(s, "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      // thresholds sized to COMPRESSED shuffle bytes at toy SF (the stats
+      // AQE reads are post-lz4: the 10k-row hot partition is ~10 KB)
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512b")
     def sk(c: org.apache.spark.sql.Column) =
       when(pmod(c, lit(4L)) =!= 0, lit(0L)).otherwise(c)
     // the fact rows carry their payload (event_id, value) through the

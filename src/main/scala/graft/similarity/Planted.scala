@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{Materialize, Tables}
 import graft.functions.VectorFunctions.{cosine, dot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,40 +129,12 @@ object Planted {
         col("label"))
   }
 
-  /** Round 14 (guide §7.2): the zip_with/transform corpus construction
+  /** The planted corpus as a row pins it ([[graft.Materialize.Scope.pin]]).
+    * Round 14 (guide §7.2): the zip_with/transform corpus construction
     * fed every consumer lazily — the brute-force baseline AND the index
     * pipeline each re-derived it per subtree (4-5 evaluations per
-    * contract row). One eager materialization (corpus × 64 floats,
-    * ~0.5 MB at sf0.1) runs it once; output unchanged.
-    *
-    * Round 15 (VERDICT r14 item 4, guide §5): the materialization is
-    * `persist(MEMORY_AND_DISK)`, NOT `localCheckpoint` — this frame
-    * GROWS WITH THE CORPUS, and a local checkpoint stores unreplicated
-    * executor-local partitions with the lineage severed: at 100 TB one
-    * lost executor kills the whole query. Persist keeps the lineage, so
-    * a lost block recomputes.
-    *
-    * `pinning` runs a row body that may `pin` (persist) corpus-scale
-    * frames, eagerly materializes the body's (tiny, contract-sized)
-    * result with `localCheckpoint` — the KB-scale frames are exactly
-    * where localCheckpoint is right — and unpersists every pinned frame
-    * on the way out, on success AND on failure: each persist happens
-    * inside the guarded region, so a body that throws after pinning
-    * (a failing centroid fit, a join set-up error) cannot leave a
-    * CacheManager entry behind in a long driver session. Frames are
-    * persisted lazily: the first consumer materializes each partition
-    * under the block manager's get-or-compute lock and later consumers
-    * read the cache. */
-  private[graft] def pinning(body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      held += df
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    try body(pin).localCheckpoint(true)
-    finally held.foreach { f => f.unpersist(false); () }
-  }
-
+    * contract row). One materialization (corpus × 64 floats, ~0.5 MB at
+    * sf0.1) runs it once; output unchanged. */
   private def plantedVectors(s: SparkSession, d: String): DataFrame =
     plantedCorpus(s, d).select(col("vec_id"), col("embedding"))
 
@@ -174,23 +146,25 @@ object Planted {
     * Within-label θ ≈ 30–40° ⇒ per-plane collision ≈ 0.8, any-of-16-
     * tables ≳ 0.97 per true neighbor — the regime the s02 scaladoc
     * promises "supports sharper filtering". */
-  def s17PlantedLsh(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    val pc = pin(plantedVectors(s, d))
-    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.lshTopKOn(pc), PlantedFloor)
-  }
+  def s17PlantedLsh(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-s17-") { m =>
+      val pc = m.pin(plantedVectors(s, d))
+      Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+        Similarity.lshTopKOn(pc), PlantedFloor)
+    }
 
   /** s18: IVF recall in the clustered regime — coarse quantizer trained
     * on the planted corpus (memoized under its own key; the KMeans
     * cells recover the label clusters), probe width unchanged from s03. */
-  def s18PlantedIvf(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    val pc = pin(plantedVectors(s, d))
-    val centroids = Similarity.memoizedCentroids(s, s"$d#planted") {
-      Similarity.fitCoarse(pc)
+  def s18PlantedIvf(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-s18-") { m =>
+      val pc = m.pin(plantedVectors(s, d))
+      val centroids = Similarity.memoizedCentroids(s, s"$d#planted") {
+        Similarity.fitCoarse(pc)
+      }
+      Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+        Similarity.ivfTopKOn(pc, centroids), PlantedFloor)
     }
-    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.ivfTopKOn(pc, centroids), PlantedFloor)
-  }
 
   /** Cluster-size-adaptive refine depth (see [[PlantedRefine]]): one
     * count job, exact, so the rows stay deterministic. */
@@ -201,20 +175,22 @@ object Planted {
   /** s19: PQ(8×32)+ADC recall in the clustered regime, refine depth =
     * one cluster (non-vacuous at every SF: 10 % of the corpus, where
     * the isotropic row's 500-row refine IS the corpus at sf0.01). */
-  def s19PlantedPq(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    val pc = pin(plantedVectors(s, d))
-    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.pqTopKOn(pc, Similarity.PqCodes, clusterRefine(s, d, pc)),
-      PlantedFloor)
-  }
+  def s19PlantedPq(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-s19-") { m =>
+      val pc = m.pin(plantedVectors(s, d))
+      Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+        Similarity.pqTopKOn(pc, Similarity.PqCodes, clusterRefine(s, d, pc)),
+        PlantedFloor)
+    }
 
   /** s20: JL-projected (64→32) recall in the clustered regime, same
     * cluster-sized refine as s19. */
-  def s20PlantedJl(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    val pc = pin(plantedVectors(s, d))
-    Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
-      Similarity.jlTopKOn(pc, clusterRefine(s, d, pc)), PlantedFloor)
-  }
+  def s20PlantedJl(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-s20-") { m =>
+      val pc = m.pin(plantedVectors(s, d))
+      Similarity.recallContractOn(Similarity.bruteTopKOn(pc),
+        Similarity.jlTopKOn(pc, clusterRefine(s, d, pc)), PlantedFloor)
+    }
 
   // --- s22: the deliberately-hard boundary contract --------------------
 
@@ -245,16 +221,17 @@ object Planted {
     * EXPECTED to degrade, at the measured-degradation floor
     * [[HardFloor]]. s17-s20 prove the indexes work where they should
     * work; this row proves the harness would notice if they stopped. */
-  def s22PlantedHardIvf(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    // same §7.2 reuse as plantedVectors, same round-15 persist rationale
-    val hc = pin(plantedCorpus(s, d, HardAlpha)
-      .select(col("vec_id"), col("embedding")))
-    val centroids = Similarity.memoizedCentroids(s, s"$d#planted-hard") {
-      Similarity.fitCoarse(hc)
+  def s22PlantedHardIvf(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-s22-") { m =>
+      // same §7.2 reuse as plantedVectors
+      val hc = m.pin(plantedCorpus(s, d, HardAlpha)
+        .select(col("vec_id"), col("embedding")))
+      val centroids = Similarity.memoizedCentroids(s, s"$d#planted-hard") {
+        Similarity.fitCoarse(hc)
+      }
+      Similarity.recallContractOn(Similarity.bruteTopKOn(hc),
+        Similarity.ivfTopKOn(hc, centroids), HardFloor)
     }
-    Similarity.recallContractOn(Similarity.bruteTopKOn(hc),
-      Similarity.ivfTopKOn(hc, centroids), HardFloor)
-  }
 
   // --- d19: planted near-duplicates recovered via LSH candidates ------
 
@@ -318,69 +295,67 @@ object Planted {
     * 0.52 the bands are separable and the per-pair LSH miss
     * probability is ~10⁻¹², so any count drift means the bucketer
     * broke, not noise. */
-  def d19PlantedNearDup(s: SparkSession, d: String): DataFrame = pinning { pin =>
-    val pc = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    val copies = pc.filter(col("vec_id") % CopyMod === 0)
-      // deterministic per-copy nudge dimension spreads across positions;
-      // the nudge scales with the vector's own norm so the planted
-      // cosine band holds whatever the corpus normalization (cosine is
-      // scale-invariant, so the copy needs no renormalizing)
-      .withColumn("k", pmod(col("vec_id") / CopyMod, lit(Similarity.Dim.toLong)).cast("int"))
-      .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
-      .select((col("vec_id") + CopyIdOffset).as("vec_id"),
-        transform(col("embedding"),
-          (x, i) => x + when(i === col("k"), col("nrm") * lit(CopyDelta))
-            .otherwise(lit(0.0))).cast("array<float>")
-          .as("embedding"))
-    val corpus = pc.unionByName(copies)
-    val sigs = (0 until DupTables).map(t =>
-      struct(lit(t).as("t"), dupSignature(t, col("embedding")).as("sig")))
-    // Round 14 (guide §7.2, duplicated subtrees): the 16×12-plane
-    // signature pipeline fed BOTH sides of the bucket self-join (renamed
-    // projections → no ReusedExchange) and, through `found`, THREE final
-    // aggregates — the 192-dot-product pass executed ~4×/run. Eagerly
-    // materializing the (vec_id, t, sig) frame (≤ 24 bytes/row ×
-    // corpus × 16) runs it exactly once; `found` below gets the same
-    // treatment for the three aggregates reading it. Output unchanged.
-    // Round 15 (VERDICT r14 item 4): both frames are corpus-/pair-scale,
-    // so the materialization is persist (lineage kept, lost blocks
-    // recompute at 100 TB) instead of an unreplicated localCheckpoint;
-    // the one-row result below is eagerly materialized and both frames
-    // explicitly unpersisted before return.
-    val buckets = pin(
-      corpus.select(col("vec_id"), explode(array(sigs: _*)).as("bk"))
-        .select(col("vec_id"), col("bk.t").as("t"), col("bk.sig").as("sig")))
-    val cand = buckets.join(
-        buckets.select(col("vec_id").as("b"), col("t"), col("sig")),
-        Seq("t", "sig"))
-      .filter(col("vec_id") < col("b"))
-      .select(col("vec_id").as("a"), col("b"))
-      .dropDuplicates("a", "b")
-    val ea = corpus.select(col("vec_id").as("a"), col("embedding").as("ea"))
-    val eb = corpus.select(col("vec_id").as("b"), col("embedding").as("eb"))
-    // d05's round(·,4) threshold convention keeps the admission boundary
-    // engine-identical (nothing sits near τ on any test corpus — planted
-    // ≥ 0.9987, background ≤ 0.52 — but the convention costs nothing)
-    val found = pin(cand.join(ea, "a").join(eb, "b")
-      .filter(round(cosine(col("ea"), col("eb")), 4) >= NearDupTau)
-      .select(col("a"), col("b")))
-    val planted = pc.filter(col("vec_id") % CopyMod === 0)
-      .select(col("vec_id").as("a"), (col("vec_id") + CopyIdOffset).as("b"))
-    val nPlanted = planted.agg(count(lit(1)).as("n_planted"))
-    val nRecovered = planted.join(found, Seq("a", "b"), "left_semi")
-      .agg(count(lit(1)).as("n_recovered"))
-    // non-planted admissions are NOT presumed false: the oracle counts
-    // the corpus's true ≥ τ background pairs exactly (the r8 sf0.3
-    // stress corpus really contains cross-copy near-dups, and a
-    // detector that reports them is working, not hallucinating) — the
-    // contract is found ≡ truth, premise-free at any SF
-    val nBackground = found.join(planted, Seq("a", "b"), "left_anti")
-      .agg(count(lit(1)).as("n_background"))
-    nPlanted.crossJoin(nRecovered).crossJoin(nBackground)
-      .select(col("n_planted"), col("n_recovered"),
-        (col("n_recovered") === col("n_planted")).as("all_recovered"),
-        col("n_background"))
-  }
+  def d19PlantedNearDup(s: SparkSession, d: String): DataFrame =
+    Materialize.scoped(s, "graft-d19-") { m =>
+      val pc = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+      val copies = pc.filter(col("vec_id") % CopyMod === 0)
+        // deterministic per-copy nudge dimension spreads across positions;
+        // the nudge scales with the vector's own norm so the planted
+        // cosine band holds whatever the corpus normalization (cosine is
+        // scale-invariant, so the copy needs no renormalizing)
+        .withColumn("k", pmod(col("vec_id") / CopyMod, lit(Similarity.Dim.toLong)).cast("int"))
+        .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
+        .select((col("vec_id") + CopyIdOffset).as("vec_id"),
+          transform(col("embedding"),
+            (x, i) => x + when(i === col("k"), col("nrm") * lit(CopyDelta))
+              .otherwise(lit(0.0))).cast("array<float>")
+            .as("embedding"))
+      val corpus = pc.unionByName(copies)
+      val sigs = (0 until DupTables).map(t =>
+        struct(lit(t).as("t"), dupSignature(t, col("embedding")).as("sig")))
+      // Round 14 (guide §7.2, duplicated subtrees): the 16×12-plane
+      // signature pipeline fed BOTH sides of the bucket self-join (renamed
+      // projections → no ReusedExchange) and, through `found`, THREE final
+      // aggregates — the 192-dot-product pass executed ~4×/run. Eagerly
+      // materializing the (vec_id, t, sig) frame (≤ 24 bytes/row ×
+      // corpus × 16) runs it exactly once; `found` below gets the same
+      // treatment for the three aggregates reading it. Output unchanged.
+      // Both frames are corpus-/pair-scale, so they are pinned, not
+      // checkpointed (the policy in graft.Materialize).
+      val buckets = m.pin(
+        corpus.select(col("vec_id"), explode(array(sigs: _*)).as("bk"))
+          .select(col("vec_id"), col("bk.t").as("t"), col("bk.sig").as("sig")))
+      val cand = buckets.join(
+          buckets.select(col("vec_id").as("b"), col("t"), col("sig")),
+          Seq("t", "sig"))
+        .filter(col("vec_id") < col("b"))
+        .select(col("vec_id").as("a"), col("b"))
+        .dropDuplicates("a", "b")
+      val ea = corpus.select(col("vec_id").as("a"), col("embedding").as("ea"))
+      val eb = corpus.select(col("vec_id").as("b"), col("embedding").as("eb"))
+      // d05's round(·,4) threshold convention keeps the admission boundary
+      // engine-identical (nothing sits near τ on any test corpus — planted
+      // ≥ 0.9987, background ≤ 0.52 — but the convention costs nothing)
+      val found = m.pin(cand.join(ea, "a").join(eb, "b")
+        .filter(round(cosine(col("ea"), col("eb")), 4) >= NearDupTau)
+        .select(col("a"), col("b")))
+      val planted = pc.filter(col("vec_id") % CopyMod === 0)
+        .select(col("vec_id").as("a"), (col("vec_id") + CopyIdOffset).as("b"))
+      val nPlanted = planted.agg(count(lit(1)).as("n_planted"))
+      val nRecovered = planted.join(found, Seq("a", "b"), "left_semi")
+        .agg(count(lit(1)).as("n_recovered"))
+      // non-planted admissions are NOT presumed false: the oracle counts
+      // the corpus's true ≥ τ background pairs exactly (the r8 sf0.3
+      // stress corpus really contains cross-copy near-dups, and a
+      // detector that reports them is working, not hallucinating) — the
+      // contract is found ≡ truth, premise-free at any SF
+      val nBackground = found.join(planted, Seq("a", "b"), "left_anti")
+        .agg(count(lit(1)).as("n_background"))
+      nPlanted.crossJoin(nRecovered).crossJoin(nBackground)
+        .select(col("n_planted"), col("n_recovered"),
+          (col("n_recovered") === col("n_planted")).as("all_recovered"),
+          col("n_background"))
+    }
 
   val queries: Map[String, Q] = Map(
     "s17_planted_lsh" -> s17PlantedLsh _,

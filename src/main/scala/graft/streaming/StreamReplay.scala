@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.{Session, Tables}
+import graft.{Materialize, Session, Tables}
 import graft.model.PipelineLayout
-import graft.similarity.Planted
 import graft.sink.Sinks
 import graft.validate.SchemaValidator.Rule
 import org.apache.hadoop.fs.Path
@@ -10,9 +9,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
-
-import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
 
 /** Driver-checkable batch replays of the streaming path (SURVEY §2.8):
   * the events table is staged as JSON files and run through the REAL
@@ -22,9 +18,9 @@ import scala.util.control.NonFatal
   * drops, ProcessingTime cadence) stay in StreamingSpec.
   *
   * Every row runs through one harness, [[replay]], which owns the
-  * scaffold: the temp dir, the cloned session, the staged JSON feed and
-  * its source, the drains, the memory sinks, and the eager
-  * materialization of the result before the temp dir goes.
+  * scaffold: the cloned session, the staged JSON feed and its source,
+  * the drains and the memory sinks, all inside one
+  * [[graft.Materialize.scoped]] scope.
   *
   * The clone (same SparkContext, isolated SQLConf) pins the stateful
   * shuffle to 8 partitions. A state store opens (and commits) one store
@@ -69,13 +65,15 @@ object StreamReplay {
   private val JsonOptions = Map("timestampFormat" -> JsonTsFormat)
 
   /** What a replay body works with: `s`, the replay's cloned session, and
-    * `tmp`, its temp dir. Feeds are staged under `tmp` as JSON and opened
-    * with the same [[JsonTsFormat]]; every drain checkpoints to
-    * `tmp/ckpt`, so a second drain resumes where the first stopped. `pin`
-    * persists a frame until the replay ends ([[Planted.pinning]]). */
+    * `tmp`, its scope's temp dir. Feeds are staged under `tmp` as JSON and
+    * opened with the same [[JsonTsFormat]]; every drain checkpoints to
+    * `tmp/ckpt`, so a second drain resumes where the first stopped. */
   private[graft] final class Replay private[streaming] (
-      val s: SparkSession, val tmp: String, row: String,
-      val pin: DataFrame => DataFrame, views: ArrayBuffer[String]) {
+      val s: SparkSession, m: Materialize.Scope, row: String) {
+    val tmp: String = m.tmp
+
+    /** `df` persisted until the replay ends. */
+    def pin(df: DataFrame): DataFrame = m.pin(df)
 
     /** Stages `df` into `tmp/incoming` as is, one JSON file per partition. */
     def stage(df: DataFrame): Unit =
@@ -102,7 +100,7 @@ object StreamReplay {
       * name is dropped when the replay ends. */
     def queryName(): String = {
       val name = s"graft_${row}_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      views += name
+      m.onClose { s.catalog.dropTempView(name); () }
       name
     }
 
@@ -167,15 +165,8 @@ object StreamReplay {
     }
   }
 
-  /** Runs `body` on a fresh [[Replay]] and returns its result
-    * materialized: an eager localCheckpoint through
-    * [[Planted.pinning]], which also releases every frame the body
-    * pinned. The plan reads the temp dir's files and the memory tables,
-    * so it must be materialized before they go; each replay would
-    * otherwise also leak its staged copies of the corpus under /tmp.
-    * Then, success or failure, the clone's streams are stopped, its
-    * memory-sink views dropped and the temp dir deleted, without a
-    * cleanup failure ever masking the body's own exception.
+  /** Runs `body` on a fresh [[Replay]] in a [[graft.Materialize.scoped]]
+    * scope, which also stops the clone's streams when it closes.
     * `narrow = false` keeps the caller's shuffle width; `rocksDb` puts
     * the state store off-heap. */
   private[graft] def replay(s: SparkSession, row: String, narrow: Boolean = true,
@@ -186,17 +177,9 @@ object StreamReplay {
       "spark.sql.adaptive.enabled" -> "false") ++
       Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"): _*)
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-$row-").toString
-    val views = ArrayBuffer.empty[String]
-    def quietly(cleanup: => Unit): Unit = try cleanup catch { case NonFatal(_) => () }
-    try Planted.pinning(pin => body(new Replay(clone, tmp, row, pin, views)))
-    finally {
-      quietly(clone.streams.active.foreach(_.stop()))
-      views.foreach(v => quietly { clone.catalog.dropTempView(v); () })
-      quietly {
-        val p = new Path(tmp)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true); ()
-      }
+    Materialize.scoped(s, s"graft-$row-") { m =>
+      m.onClose(clone.streams.active.foreach(_.stop()))
+      body(new Replay(clone, m, row))
     }
   }
 

@@ -204,8 +204,19 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Join"), plan)
   }
 
+  /** d06's lazy plan, executed inside the scope that owns its history table. */
+  private def d06Executed(): String = {
+    var plan = ""
+    Materialize.scoped(spark, "graft-d06-plan-spec-") { m =>
+      val df = graft.dedup.Dedup.d06Over(spark, sf, m)
+      plan = executed(df)
+      df
+    }
+    plan
+  }
+
   test("d06: keep-first runs as WindowGroupLimit (top-1 per fp, partial+final), no extra exchange") {
-    val plan = executed(graft.dedup.Dedup.d06IncrementalDedup(spark, sf))
+    val plan = d06Executed()
     // Spark's rank-filter pushdown must keep applying: without it every
     // batch row flows into the window sort instead of top-1-per-group
     assert(plan.contains("WindowGroupLimit"), plan)
@@ -214,7 +225,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d06: bucketed history side joins with zero Exchange (the batch window's is the only hash shuffle)") {
-    val plan = executed(graft.dedup.Dedup.d06IncrementalDedup(spark, sf))
+    val plan = d06Executed()
     // the anti-join must stay sort-merge (broadcast can't hold 100 TB of
     // accumulated fingerprints) and read history bucket-aligned: exactly
     // ONE hash exchange in the whole plan — the batch side's window

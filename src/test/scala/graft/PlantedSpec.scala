@@ -138,8 +138,8 @@ class PlantedSpec extends SparkSpec {
     import org.apache.spark.storage.StorageLevel
     val frame = spark.range(0, 1000, 1, 2).select((col("id") * 7).as("pin_probe"))
     val err = intercept[IllegalStateException] {
-      Planted.pinning { pin =>
-        val pc = pin(frame)
+      Materialize.scoped(spark, "graft-pin-spec-") { m =>
+        val pc = m.pin(frame)
         // the persist registered a CacheManager entry and blocks exist
         assert(pc.storageLevel == StorageLevel.MEMORY_AND_DISK)
         assert(pc.count() == 1000)
@@ -155,8 +155,8 @@ class PlantedSpec extends SparkSpec {
     import org.apache.spark.storage.StorageLevel
     val a = spark.range(0, 500, 1, 2).select((col("id") * 3).as("pin_a"))
     val b = spark.range(0, 500, 1, 2).select((col("id") * 5).as("pin_b"))
-    val out = Planted.pinning { pin =>
-      val pa = pin(a); val pb = pin(b)
+    val out = Materialize.scoped(spark, "graft-pin-spec-") { m =>
+      val pa = m.pin(a); val pb = m.pin(b)
       pa.agg(count(lit(1)).as("na")).crossJoin(pb.agg(count(lit(1)).as("nb")))
     }
     assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE)

@@ -36,6 +36,19 @@ class ProbeSpec extends SparkSpec {
     assert(lines.last.contains("isFinalPlan=true"))
   }
 
+  test("plan: sections come in query order and a query's final collect is never the next query's") {
+    val (d02, q01) = ("d02_ngram_jaccard", "q01_pricing_summary")
+    val lines = Probe.run(spark, "plan", sf, Seq(d02, q01))
+    val owners = lines.map(_.stripPrefix("== ").takeWhile(_ != ' '))
+    val firstQ01 = owners.indexOf(q01)
+    assert(firstQ01 > 0 && owners.take(firstQ01).forall(_ == d02) &&
+      owners.drop(firstQ01).forall(_ == q01), owners)
+    def body(section: String) = section.dropWhile(_ != '\n')
+    val d02Final = body(lines.find(_.startsWith(s"== $d02 FINAL PLAN ==")).get)
+    assert(!lines.drop(firstQ01).exists(body(_) == d02Final),
+      "d02's final collect was listed under q01")
+  }
+
   test("plan: wide field lists print whole, not cut at maxToStringFields") {
     // s16's JL projection runs an intermediate execution wider than
     // Spark's default 25 printed fields
